@@ -26,18 +26,14 @@ import org.apache.spark.sql.SparkSession
   * parsed as nothing); full detail goes to a sidecar file.
   */
 object Bench {
-  // Spark 4.x on JDK 17 module flags for the forked children (the parent
-  // got them from sbt's javaOptions; ProcessBuilder children need them
-  // explicitly). Matches launcher.JavaModuleOptions.defaultModuleOptions.
-  private val jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  // Spark 4.x on JDK 17 module flags for the forked children: the
+  // parent's own --add-opens arguments (build.sbt's javaOptions), since
+  // ProcessBuilder children do not inherit them.
+  private def parentAddOpens: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      .filter(_.startsWith("--add-opens"))
+  }
 
   private def mkSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -172,7 +168,7 @@ object Bench {
       val java17 = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
       val heap = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
       val cmd: Seq[String] =
-        Seq(java17) ++ jdk17AddOpens ++ Seq(
+        Seq(java17) ++ parentAddOpens ++ Seq(
           s"-Xmx$heap", "-Dspark.ui.enabled=false",
           "-Dspark.sql.session.timeZone=UTC",
           "-cp", sys.props("java.class.path"), "graft.Bench")

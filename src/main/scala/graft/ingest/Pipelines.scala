@@ -5,6 +5,7 @@ import scala.concurrent.duration.{DurationInt, FiniteDuration}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 import graft.operators.Skewness
@@ -27,9 +28,15 @@ import graft.operators.Skewness
   *    (B19) becomes partition pruning at read
   *
   * Scale: every stage before the sink is a narrow projection/filter or a
-  * broadcast join — no shuffle in the hot path; the only stateful query
-  * is the windowed stage aggregation, whose state is bounded by
-  * (live stages × window) and evicted by watermark.
+  * broadcast join — no shuffle in the hot path. The derived stage
+  * aggregations run one computation: the windowed delivery is the batch
+  * `Skewness.stageAgg` with the event-time window as one more grouping
+  * key (state bounded by live stages × window, evicted by watermark);
+  * the stateful and `transformWithState` deliveries share the one
+  * min/max/sum/count fold in `StageAgg.scala` (one entry per live stage).
+  *
+  * Every `start*` reads through [[jsonSource]], writes parquet through
+  * [[fileSink]] and clones its session only through [[sessionFor]].
   */
 object Pipelines {
 
@@ -58,25 +65,55 @@ object Pipelines {
     * here), not the batch data volume — 32 shards for ~100 stage keys
     * triples empty-batch latency for nothing, while a 100 TB deployment
     * with hot state would raise it well past the session default. The
-    * knob rides a cloned session so the caller's session conf is never
-    * mutated; None inherits the session setting.
+    * knob and any `settings` ride a cloned session so the caller's
+    * session conf is never mutated; with neither, the caller's session
+    * runs the query.
     */
-  private def sessionFor(spark: SparkSession, conf: Config): SparkSession =
-    conf.streamShufflePartitions.fold(spark) { n =>
+  private def sessionFor(spark: SparkSession, conf: Config,
+      settings: (String, String)*): SparkSession = {
+    val all = conf.streamShufflePartitions.map("spark.sql.shuffle.partitions" -> _.toString) ++
+      settings
+    if (all.isEmpty) spark
+    else {
       val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      all.foreach { case (k, v) => s.conf.set(k, v) }
       s
     }
+  }
 
+  /** The pipelines' source: `conf.sourceDir` as a JSON file stream, read
+    * on [[sessionFor]]`(spark, conf, settings)`.
+    */
+  private def jsonSource(spark: SparkSession, conf: Config, schema: StructType,
+      settings: (String, String)*): DataFrame =
+    sessionFor(spark, conf, settings: _*).readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
+      .json(conf.sourceDir)
+
+  /** Append-mode parquet sink at `conf.tablePath(table)`; the checkpoint
+    * directory is named after the table unless `checkpoint` names it.
+    */
   private def fileSink(df: DataFrame, conf: Config, table: String,
-      partitionCols: Seq[String]): StreamingQuery =
+      partitionCols: Seq[String] = Seq("dt"),
+      checkpoint: Option[String] = None): StreamingQuery =
     df.writeStream
       .format("parquet")
       .partitionBy(partitionCols: _*)
       .option("path", conf.tablePath(table))
-      .option("checkpointLocation", s"${conf.checkpointRoot}/$table")
+      .option("checkpointLocation", s"${conf.checkpointRoot}/${checkpoint.getOrElse(table)}")
       .trigger(trigger(conf))
       .start()
+
+  /** A derived stage-agg delivery: table `<stage agg table>_<variant>`,
+    * checkpoint `stage_agg_<variant>`, dt-partitioned.
+    */
+  private def stageAggSink(agg: DataFrame, conf: Config, variant: String): StreamingQuery =
+    fileSink(Transforms.withDt(agg, "metricTime"), conf,
+      s"${Schemas.StageAggMetricsTable}_$variant", checkpoint = Some(s"stage_agg_$variant"))
+
+  private def taskMetrics(raw: DataFrame): DataFrame =
+    Transforms.projectTaskMetrics(Transforms.route(raw, Transforms.TaskMetricsType))
 
   /** Metrics pipeline: one source, routed to the task table and the
     * stage-agg passthrough table, plus a derived stateful stage-skewness
@@ -86,13 +123,8 @@ object Pipelines {
     * Returns the started queries (task, stageAggPassthrough, stageAggDerived).
     */
   def startMetrics(spark: SparkSession, conf: Config): Seq[StreamingQuery] = {
-    val raw = sessionFor(spark, conf).readStream
-      .schema(Transforms.rawMetricSchema)
-      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-      .json(conf.sourceDir)
-
-    val projected =
-      Transforms.projectTaskMetrics(Transforms.route(raw, Transforms.TaskMetricsType))
+    val raw = jsonSource(spark, conf, Transforms.rawMetricSchema)
+    val projected = taskMetrics(raw)
     // A14 hardening: an at-least-once upstream (the reference retries
     // whole batches on failure) can deliver duplicates; the task key is
     // unique per attempt, so a watermark-bounded dedup restores
@@ -104,31 +136,20 @@ object Pipelines {
           .dropDuplicatesWithinWatermark(
             "appId", "jobId", "stageId", "stageAttemptId", "taskId")
       else projected
-    val tasks = Transforms.withDt(deduped, "metricTime")
-    val taskQ = fileSink(tasks, conf, Schemas.TaskMetricsTable, Seq("dt"))
+    val taskQ = fileSink(Transforms.withDt(deduped, "metricTime"), conf, Schemas.TaskMetricsTable)
 
     val passthrough = Transforms.withDt(
       Transforms.projectStageAgg(Transforms.route(raw, Transforms.StageAggMetricsType)),
       "metricTime")
-    val passQ = fileSink(passthrough, conf, Schemas.StageAggMetricsTable, Seq("dt"))
+    val passQ = fileSink(passthrough, conf, Schemas.StageAggMetricsTable)
 
     // Derived stage aggregation: event-time windowed, append-mode (rows
     // emit when the watermark closes the window — the stream-native
     // equivalent of "stage completed", SURVEY §7.4). Partial/final agg
-    // shape mirrors §3.2; state is evicted by the watermark.
-    val agg = windowedStageAgg(
-        Transforms.projectTaskMetrics(Transforms.route(raw, Transforms.TaskMetricsType)),
-        conf)
-      .drop("windowStart") // sink keeps the StageAggMetric record shape
-    val aggQ = Transforms.withDt(agg, "metricTime")
-      .writeStream
-      .format("parquet")
-      .partitionBy("dt")
-      .option("path", conf.tablePath(Schemas.StageAggMetricsTable + "_derived"))
-      .option("checkpointLocation", s"${conf.checkpointRoot}/stage_agg_derived")
-      .outputMode("append")
-      .trigger(trigger(conf))
-      .start()
+    // shape mirrors §3.2; state is evicted by the watermark. The sink
+    // keeps the StageAggMetric record shape.
+    val aggQ = stageAggSink(
+      windowedStageAgg(projected, conf).drop("windowStart"), conf, "derived")
 
     Seq(taskQ, passQ, aggQ)
   }
@@ -139,50 +160,16 @@ object Pipelines {
     * and the StageAggMetric-shaped sink drops.
     */
   def windowedStageAgg(tasks: DataFrame, conf: Config): DataFrame =
-    tasks
-      .withWatermark("metricTime", conf.watermarkDelay)
-      .groupBy(
-        window(col("metricTime"), conf.stageWindow),
-        col("appName"), col("appId"), col("jobId"), col("stageId"))
-      .agg(
-        max(col("inputBytesRead")).as("max_in"),
-        min(col("inputBytesRead")).as("min_in"),
-        avg(col("inputBytesRead")).as("avg_in"),
-        max(col("shuffleBytesRead")).as("max_sh"),
-        min(col("shuffleBytesRead")).as("min_sh"),
-        avg(col("shuffleBytesRead")).as("avg_sh"),
-        max(col("metricTime")).as("maxMetricTime"))
-      .select(
-        col("appName"), col("appId"), col("jobId"), col("stageId"),
-        Skewness.skewFromStats(col("max_in"), col("min_in"), col("avg_in"))
-          .as("inputBytesReadSkewness"),
-        col("max_in").as("maxInputBytesRead"),
-        Skewness.skewFromStats(col("max_sh"), col("min_sh"), col("avg_sh"))
-          .as("shuffleBytesReadSkewness"),
-        col("max_sh").as("maxShuffleBytesRead"),
-        col("maxMetricTime").as("metricTime"),
-        col("window.start").as("windowStart"))
+    Skewness.stageAgg(tasks.withWatermark("metricTime", conf.watermarkDelay),
+      Some(window(col("metricTime"), conf.stageWindow)))
 
   /** Windowed-agg-only delivery into its own window-keyed table — the
     * focused variant the correctness gate replays (startMetrics runs
     * the same aggregation alongside its task/passthrough sinks).
     */
   def startMetricsWindowed(spark: SparkSession, conf: Config): StreamingQuery = {
-    val raw = sessionFor(spark, conf).readStream
-      .schema(Transforms.rawMetricSchema)
-      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-      .json(conf.sourceDir)
-    val agg = windowedStageAgg(
-      Transforms.projectTaskMetrics(Transforms.route(raw, Transforms.TaskMetricsType)), conf)
-    Transforms.withDt(agg, "metricTime")
-      .writeStream
-      .format("parquet")
-      .partitionBy("dt")
-      .option("path", conf.tablePath(Schemas.StageAggMetricsTable + "_windowed"))
-      .option("checkpointLocation", s"${conf.checkpointRoot}/stage_agg_windowed")
-      .outputMode("append")
-      .trigger(trigger(conf))
-      .start()
+    val raw = jsonSource(spark, conf, Transforms.rawMetricSchema)
+    stageAggSink(windowedStageAgg(taskMetrics(raw), conf), conf, "windowed")
   }
 
   /** Alternative derived-agg delivery: foreachBatch recompute-upsert.
@@ -194,13 +181,8 @@ object Pipelines {
     * variant; the windowed query above is the stateful one.
     */
   def startMetricsUpsert(spark: SparkSession, conf: Config): StreamingQuery = {
-    val raw = sessionFor(spark, conf).readStream
-      .schema(Transforms.rawMetricSchema)
-      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-      .json(conf.sourceDir)
-    val tasks = Transforms.withDt(
-      Transforms.projectTaskMetrics(Transforms.route(raw, Transforms.TaskMetricsType)),
-      "metricTime")
+    val raw = jsonSource(spark, conf, Transforms.rawMetricSchema)
+    val tasks = Transforms.withDt(taskMetrics(raw), "metricTime")
     // own table name: the upsert layout carries an extra batch_id
     // partition level, so sharing startMetrics' task path would mix two
     // incompatible partition schemas in one directory
@@ -247,60 +229,26 @@ object Pipelines {
     * the closest stream-native match to the reference's
     * "aggregate on stage completion" callback.
     */
-  def startMetricsStateful(spark: SparkSession, conf: Config,
-      inactivityMs: Long = 60000L): StreamingQuery = {
-    val raw = sessionFor(spark, conf).readStream
-      .schema(Transforms.rawMetricSchema)
-      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-      .json(conf.sourceDir)
-    val tasks = Transforms.projectTaskMetrics(
-      Transforms.route(raw, Transforms.TaskMetricsType))
-    val agg = StatefulStageAgg(tasks, conf.watermarkDelay, inactivityMs).toDF()
-    Transforms.withDt(agg, "metricTime")
-      .writeStream
-      .format("parquet")
-      .partitionBy("dt")
-      .option("path", conf.tablePath(Schemas.StageAggMetricsTable + "_stateful"))
-      .option("checkpointLocation", s"${conf.checkpointRoot}/stage_agg_stateful")
-      .outputMode("append")
-      .trigger(trigger(conf))
-      .start()
+  def startMetricsStateful(spark: SparkSession, conf: Config): StreamingQuery = {
+    val raw = jsonSource(spark, conf, Transforms.rawMetricSchema)
+    stageAggSink(StatefulStageAgg(taskMetrics(raw), conf.watermarkDelay).toDF(), conf, "stateful")
   }
 
-  /** Fourth derived-agg delivery: the `transformWithState` stage
-    * aggregation ([[TwsStageAgg]], Spark 4 arbitrary-state API) wired to
-    * a parquet sink. Same inferred stage-closure semantics as
-    * [[startMetricsStateful]]; state rides the RocksDB provider (the API
-    * requires it — and off-heap state is the right provider once live
-    * state outgrows executor heap). The provider is set on a cloned
-    * session so the caller's session conf is never mutated.
+  /** Fourth derived-agg delivery: the same fold on `transformWithState`
+    * ([[TwsStageAgg]], Spark 4 arbitrary-state API) wired to a parquet
+    * sink. State rides the RocksDB provider (the API requires it — and
+    * off-heap state is the right provider once live state outgrows
+    * executor heap), set on the cloned session so the caller's session
+    * conf is never mutated. Changelog checkpointing commits the delta,
+    * not a full SST snapshot, per micro-batch — the production setting
+    * for low-latency commits.
     */
-  def startMetricsTws(spark: SparkSession, conf: Config,
-      inactivityMs: Long = 60000L): StreamingQuery = {
-    val s = spark.newSession()
-    conf.streamShufflePartitions.foreach(n =>
-      s.conf.set("spark.sql.shuffle.partitions", n.toString))
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing commits the delta, not a full SST snapshot,
-    // per micro-batch — the production setting for low-latency commits
-    s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    val raw = s.readStream
-      .schema(Transforms.rawMetricSchema)
-      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-      .json(conf.sourceDir)
-    val tasks = Transforms.projectTaskMetrics(
-      Transforms.route(raw, Transforms.TaskMetricsType))
-    val agg = TwsStageAgg(tasks, conf.watermarkDelay, inactivityMs).toDF()
-    Transforms.withDt(agg, "metricTime")
-      .writeStream
-      .format("parquet")
-      .partitionBy("dt")
-      .option("path", conf.tablePath(Schemas.StageAggMetricsTable + "_tws"))
-      .option("checkpointLocation", s"${conf.checkpointRoot}/stage_agg_tws")
-      .outputMode("append")
-      .trigger(trigger(conf))
-      .start()
+  def startMetricsTws(spark: SparkSession, conf: Config): StreamingQuery = {
+    val raw = jsonSource(spark, conf, Transforms.rawMetricSchema,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    stageAggSink(TwsStageAgg(taskMetrics(raw), conf.watermarkDelay).toDF(), conf, "tws")
   }
 
   /** A14: retry with exponential backoff for NON-transactional external
@@ -336,12 +284,9 @@ object Pipelines {
     * dt-partitioned (logs-pipeline.yaml:5-15 has no routing).
     */
   def startLogs(spark: SparkSession, conf: Config): StreamingQuery = {
-    val raw = sessionFor(spark, conf).readStream
-      .schema(Transforms.rawLogSchema)
-      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-      .json(conf.sourceDir)
-    val logs = Transforms.withDt(Transforms.projectLogRecords(raw), "logTime")
-    fileSink(logs, conf, Schemas.LogsTable, Seq("dt"))
+    val raw = jsonSource(spark, conf, Transforms.rawLogSchema)
+    fileSink(Transforms.withDt(Transforms.projectLogRecords(raw), "logTime"), conf,
+      Schemas.LogsTable)
   }
 
   /** Deep-schema logs pipeline: full Log4j2 JSON (nested level/instant,
@@ -351,12 +296,9 @@ object Pipelines {
     * nested encoding and prune columnar-ly at read.
     */
   def startLogsDeep(spark: SparkSession, conf: Config): StreamingQuery = {
-    val raw = sessionFor(spark, conf).readStream
-      .schema(Transforms.rawLogSchemaDeep)
-      .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-      .json(conf.sourceDir)
-    val logs = Transforms.withDt(Transforms.projectLogRecordsDeep(raw), "logTime")
-    fileSink(logs, conf, Schemas.LogsTable + "_deep", Seq("dt"))
+    val raw = jsonSource(spark, conf, Transforms.rawLogSchemaDeep)
+    fileSink(Transforms.withDt(Transforms.projectLogRecordsDeep(raw), "logTime"), conf,
+      Schemas.LogsTable + "_deep")
   }
 
   /** Run a parsed [[PipelineConfig]] document as a LIVE pipeline: a
@@ -380,7 +322,7 @@ object Pipelines {
       spark: SparkSession,
       pipeline: PipelineConfig.Config,
       conf: Config,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       now: Option[java.sql.Timestamp] = None): Seq[StreamingQuery] = {
     // output path AND checkpoint dir derive from the index name — two
     // sinks declaring the same index would silently share a checkpoint
@@ -391,22 +333,9 @@ object Pipelines {
     require(dup.isEmpty,
       s"pipeline declares duplicate sink index(es): ${dup.mkString(", ")}" +
         " — sink paths and checkpoints are keyed by index name")
-    val session = sessionFor(spark, conf)
     pipeline.routedFrames(
-      pipeline.applyProcessors(
-        session.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
-          .json(conf.sourceDir),
-        now)
-    ).map { case (index, df) =>
-      df.writeStream
-        .format("parquet")
-        .option("path", conf.tablePath(index))
-        .option("checkpointLocation", s"${conf.checkpointRoot}/$index")
-        .trigger(trigger(conf))
-        .start()
-    }
+      pipeline.applyProcessors(jsonSource(spark, conf, schema), now)
+    ).map { case (index, df) => fileSink(df, conf, index, partitionCols = Nil) }
   }
 
   /** Generic content-routed ingest of an arbitrary keyed stream into a
@@ -417,19 +346,13 @@ object Pipelines {
   def ingestPartitioned(
       spark: SparkSession,
       sourceGlob: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       partitionCol: String,
       conf: Config): StreamingQuery = {
     val raw = sessionFor(spark, conf).readStream
       .schema(schema)
       .option("maxFilesPerTrigger", conf.maxFilesPerTrigger)
       .parquet(sourceGlob)
-    raw.writeStream
-      .format("parquet")
-      .partitionBy(partitionCol)
-      .option("path", conf.tablePath("ingested"))
-      .option("checkpointLocation", s"${conf.checkpointRoot}/ingested")
-      .trigger(trigger(conf))
-      .start()
+    fileSink(raw, conf, "ingested", Seq(partitionCol))
   }
 }

@@ -29,7 +29,7 @@ object GuardMetrics {
 
   private val log = LoggerFactory.getLogger(getClass)
 
-  // process-global running totals so a HARNESS (Bench/CliffProbe) can
+  // process-global running totals so a HARNESS (e.g. Bench) can
   // surface guard fires in its report — a scale sweep must auto-flag
   // silent recall loss instead of depending on someone reading the logs
   private val droppedTotal = new java.util.concurrent.atomic.LongAdder

@@ -56,12 +56,14 @@ object Skewness {
     *
     * Grouping by the full key fixes the reference's shared-buffer
     * cross-contamination bug under concurrent stages by construction
-    * (SURVEY §2.1 A6 notes).
+    * (SURVEY §2.1 A6 notes). An event-time `window` (a `window(...)`
+    * column) groups ahead of the stage key, and its start is kept as
+    * `windowStart`; the streaming `Pipelines.windowedStageAgg` runs it so.
     */
-  def stageAgg(taskMetrics: DataFrame): DataFrame = {
-    val keys = Seq("appName", "appId", "jobId", "stageId")
+  def stageAgg(taskMetrics: DataFrame, window: Option[Column] = None): DataFrame = {
+    val keys = Seq("appName", "appId", "jobId", "stageId").map(col)
     taskMetrics
-      .groupBy(keys.map(col): _*)
+      .groupBy(window.toSeq ++ keys: _*)
       .agg(
         max(col("inputBytesRead")).as("max_in"),
         min(col("inputBytesRead")).as("min_in"),
@@ -69,15 +71,15 @@ object Skewness {
         max(col("shuffleBytesRead")).as("max_sh"),
         min(col("shuffleBytesRead")).as("min_sh"),
         avg(col("shuffleBytesRead")).as("avg_sh"),
-        max(col("metricTime")).as("metricTime"))
-      .select(
-        col("appName"), col("appId"), col("jobId"), col("stageId"),
+        max(col("metricTime")).as("maxMetricTime"))
+      .select(keys ++ Seq(
         skewFromStats(col("max_in"), col("min_in"), col("avg_in"))
           .as("inputBytesReadSkewness"),
         col("max_in").as("maxInputBytesRead"),
         skewFromStats(col("max_sh"), col("min_sh"), col("avg_sh"))
           .as("shuffleBytesReadSkewness"),
         col("max_sh").as("maxShuffleBytesRead"),
-        col("metricTime"))
+        col("maxMetricTime").as("metricTime")) ++
+        window.map(_ => col("window.start").as("windowStart")): _*)
   }
 }

@@ -250,35 +250,8 @@ object PipelineQueries {
   // window) so no output filter is needed beyond user >= 0. Oracle =
   // the same join as plain SQL on the source table.
   def q68StreamAttribution(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     import s.implicits._
-    val schema = Tables.eventsFileSchema(s, dir)
-    val tmp = tempDir("graft-q68")
-    val spool = java.nio.file.Files.createDirectories(tmp.resolve("spool"))
-    java.nio.file.Files.createSymbolicLink(
-      spool.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val maxMs = Tables.events(s, dir).agg(max(unix_millis($"ts"))).head().getLong(0)
-    def sentinel(offMs: Long): Unit = {
-      val dir1 = tmp.resolve(s"sentinel-$offMs")
-      Tables.eventSentinel(s, schema, maxMs + offMs)
-        .coalesce(1).write.parquet(dir1.toString)
-      val listing = java.nio.file.Files.list(dir1)
-      try {
-        val part = listing.iterator()
-        while (part.hasNext) {
-          val p = part.next()
-          if (p.getFileName.toString.endsWith(".parquet"))
-            java.nio.file.Files.copy(p, spool.resolve(s"sentinel-$offMs.parquet"))
-        }
-      } finally listing.close()
-    }
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    def run(): Unit = {
-      val raw = s2.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 100000).parquet(spool.toString)
-      val ev = Tables.normalizeEventTs(raw)
+    eventStreamGate(s, dir, "graft-q68") { ev =>
       val views = ev.filter(col("event_type") === "view" || col("user_id") < 0)
         .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("vts"))
         .withWatermark("vts", "1 minute")
@@ -290,18 +263,7 @@ object PipelineQueries {
           "user_id = b_user AND bts > vts AND bts <= vts + interval 1 hour"))
         .select(col("user_id"), col("view_id"), col("buy_id"),
           unix_millis(col("vts")).as("v_ms"), unix_millis(col("bts")).as("b_ms"))
-        .writeStream.format("parquet")
-        .option("path", s"$tmp/tables/attrib")
-        .option("checkpointLocation", s"$tmp/ckpt/attrib")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
     }
-    sentinel(86400000L)
-    run()
-    sentinel(2L * 86400000L)
-    run()
-    s.read.parquet(s"$tmp/tables/attrib")
       .filter($"user_id" >= 0)
       .orderBy($"view_id", $"buy_id")
   }
@@ -714,6 +676,44 @@ object PipelineQueries {
     (conf, maxMs, sentinel)
   }
 
+  /** Shared harness of the event-stream gates (q54/q68): the events
+    * table symlinked into a parquet spool and read as a stream on a
+    * cloned session with 8 state shards (sized to ~user cardinality, see
+    * Pipelines.sessionFor; caller conf untouched). `query`'s output goes
+    * to a parquet sink in two AvailableNow runs on ONE checkpoint, each
+    * after a sentinel event (user -1) lands one, then two days past the
+    * last event: the second run's watermark flushes the first run's
+    * state. Returns the sink table, sentinels included.
+    */
+  private def eventStreamGate(s: SparkSession, dir: String, prefix: String)(
+      query: DataFrame => DataFrame): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val schema = Tables.eventsFileSchema(s, dir)
+    val tmp = tempDir(prefix)
+    val spool = Files.createDirectories(tmp.resolve("spool"))
+    Files.createSymbolicLink(spool.resolve("events.parquet"), Paths.get(s"$dir/events.parquet"))
+    val maxMs = Tables.events(s, dir).agg(max(unix_millis(col("ts")))).head().getLong(0)
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    for (offMs <- Seq(86400000L, 2L * 86400000L)) {
+      val part = tmp.resolve(s"sentinel-$offMs")
+      Tables.eventSentinel(s, schema, maxMs + offMs).coalesce(1).write.parquet(part.toString)
+      val listing = Files.list(part)
+      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
+        .forEach(p => { Files.copy(p, spool.resolve(s"sentinel-$offMs.parquet")); () })
+      finally listing.close()
+      query(Tables.normalizeEventTs(s2.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 100000).parquet(spool.toString)))
+        .writeStream.format("parquet")
+        .option("path", s"$tmp/tables/sink")
+        .option("checkpointLocation", s"$tmp/ckpt/sink")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+    s.read.parquet(s"$tmp/tables/sink")
+  }
+
   /** Common output shape of the stage-agg gates (sans sentinels);
     * `keepWindow` adds the window start for the windowed delivery.
     */
@@ -1027,53 +1027,14 @@ object PipelineQueries {
   // recompute on the source.
   def q54StreamSessions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = Tables.eventsFileSchema(s, dir)
-    val tmp = tempDir("graft-q54")
-    val spool = java.nio.file.Files.createDirectories(tmp.resolve("spool"))
-    java.nio.file.Files.createSymbolicLink(
-      spool.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val maxMs = Tables.events(s, dir).agg(max(unix_millis($"ts"))).head().getLong(0)
-    def sentinel(offMs: Long): Unit = {
-      val dir1 = tmp.resolve(s"sentinel-$offMs")
-      Tables.eventSentinel(s, schema, maxMs + offMs)
-        .coalesce(1).write.parquet(dir1.toString)
-      val listing = java.nio.file.Files.list(dir1)
-      try {
-        val part = listing.iterator()
-        while (part.hasNext) {
-          val p = part.next()
-          if (p.getFileName.toString.endsWith(".parquet"))
-            java.nio.file.Files.copy(p, spool.resolve(s"sentinel-$offMs.parquet"))
-        }
-      } finally listing.close()
-    }
-    // session state shards sized to ~user cardinality (see
-    // Pipelines.sessionFor); cloned session, caller conf untouched
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    def run(): Unit = {
-      val raw = s2.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 100000).parquet(spool.toString)
-      val ev = Tables.normalizeEventTs(raw)
+    eventStreamGate(s, dir, "graft-q54") { ev =>
       ev.withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           min(unix_millis(col("ts"))).as("start_ms"),
           max(unix_millis(col("ts"))).as("end_ms"))
         .select(col("user_id"), col("n_events"), col("start_ms"), col("end_ms"))
-        .writeStream.format("parquet")
-        .option("path", s"$tmp/tables/sessions")
-        .option("checkpointLocation", s"$tmp/ckpt/sessions")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
     }
-    sentinel(86400000L)
-    run()
-    sentinel(2L * 86400000L)
-    run()
-    s.read.parquet(s"$tmp/tables/sessions")
       .filter($"user_id" >= 0)
       .orderBy($"user_id", $"start_ms")
   }
