@@ -72,6 +72,7 @@ object Bench {
     val guardDropped = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     def one(n: String): Either[String, Double] = {
       val before = graft.operators.GuardMetrics.snapshot()
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       val r = try { fns(n)(spark, sfDir).count(); Right(()) }
         catch { case e: Throwable => Left(sanitize(e)) }
@@ -85,9 +86,12 @@ object Bench {
       // (untouched q123 ran 0.72 s at 8 cores vs 15.5 s at 32 in q122's
       // group). Reap leftover RDD blocks explicitly and give the cleaner
       // its GC so every query starts from a clean heap; timing of the
-      // query itself is untouched.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => { r.unpersist(blocking = false); () })
+      // query itself is untouched. Only RDDs this query persisted are
+      // reaped: a localCheckpoint block set is unrecoverable once dropped,
+      // so anything persisted before the query stays.
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!persisted.contains(id)) rdd.unpersist(blocking = false)
+      }
       System.gc()
       // attribute guard fires to this query: the listener rides the
       // async bus, so flush it (untimed) before reading the counters

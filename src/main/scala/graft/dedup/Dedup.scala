@@ -456,6 +456,15 @@ object Dedup {
     * fail fast when the predicted volume exceeds `budgetPerRow`
     * candidates per input row.
     *
+    * Calling this without `estimatedRows` skips BOTH protections that
+    * depend on the corpus size: the scale-adaptive partition sizing of
+    * the pinned shuffled-hash join (at most ~128k build rows per
+    * partition; without it the unspillable build stays at the session's
+    * shuffle.partitions and can fail with "Can't acquire … bytes to
+    * build hash relation" once the corpus grows) and the volume
+    * fail-fast above. Every caller in `src/main` goes through
+    * [[simhashNearDupPairsAuto]], which passes `estimatedRows`.
+    *
     * Returns (id_a, id_b, hamming), id_a < id_b, hamming ≤ maxHamming —
     * IDENTICAL output for every valid (r, budget) choice; the knobs only
     * move cost.

@@ -1,14 +1,32 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet test tables (TESTDATA.md).
   *
-  * All reads go through `spark.read.parquet` so Catalyst's datasource V2
-  * path applies column pruning and predicate pushdown at the scan
-  * (verify with `.explain`: `PushedFilters`, `ReadSchema`). At cluster
-  * scale these would be catalog tables partitioned by date/appId; the
-  * query layer only depends on the DataFrame, not the physical layout.
+  * Reads are V1 file-source scans (`Scan parquet` over an
+  * `InMemoryFileIndex` in `.explain`, see PLANS.md) that prune columns
+  * and push predicates down at the scan (`ReadSchema`, `PushedFilters`).
+  * At cluster scale these would be catalog tables partitioned by
+  * date/appId; the query layer only depends on the DataFrame, not the
+  * physical layout.
+  *
+  * Schema once per file version: a bare `spark.read.parquet` infers the
+  * schema with a one-task Spark job (footer merge) on every call, and
+  * dashboard panels reload the same unchanged tables. [[apply]] keeps,
+  * per qualified table path, the schema Spark inferred and the key it
+  * was inferred under, and reads with that schema while the key holds.
+  * The key is the name, length and modification time of every leaf file
+  * under the path plus the session's inference settings (every
+  * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` value and
+  * `spark.sql.caseSensitive`; `nanosAsLong` decides the type of
+  * `events.ts`). Any change to the files or the settings infers again,
+  * exactly as an uncached read does, and replaces the path's entry. An
+  * entry holds the schema and its key only, never a plan or file index.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -20,8 +38,49 @@ object Tables {
     */
   val broadcastable: Set[String] = Set("region", "nation")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private final case class SchemaKey(
+      files: Seq[(String, Long, Long)],
+      settings: Map[String, String])
+
+  private final case class Inferred(key: SchemaKey, schema: StructType)
+
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a path that cannot be listed is read bare, so Spark raises its own
+    // PATH_NOT_FOUND (or resolves a glob) exactly as without the cache
+    if (!fs.exists(hPath)) return spark.read.parquet(path)
+    val qualified = fs.makeQualified(hPath).toString
+    // the key is taken BEFORE inference: files replaced while Spark
+    // infers leave a stale key behind, which the next read misses
+    val key = SchemaKey(leafFiles(fs, hPath), inferenceSettings(spark))
+    Option(inferred.get(qualified)).filter(_.key == key) match {
+      case Some(hit) => spark.read.schema(hit.schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        inferred.put(qualified, Inferred(key, df.schema))
+        df
+    }
+  }
+
+  private def leafFiles(fs: FileSystem, path: Path): Seq[(String, Long, Long)] = {
+    val it = fs.listFiles(path, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sorted
+  }
+
+  private def inferenceSettings(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
 
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
@@ -57,7 +116,7 @@ object Tables {
     * Carries the same nanos guard as [[events]] — a streaming query can
     * be the FIRST events access in an externally-built session.
     */
-  def eventsFileSchema(spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
+  def eventsFileSchema(spark: SparkSession, dir: String): StructType = {
     ensureNanosFlag(spark)
     apply(spark, dir, "events").schema
   }
@@ -91,7 +150,7 @@ object Tables {
     */
   def eventSentinel(
       spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       tsMs: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._

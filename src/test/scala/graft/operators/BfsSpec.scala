@@ -69,16 +69,29 @@ class BfsSpec extends SparkTestBase {
     // ContextCleaner GC) and anti-scaled with core count on the contract
     // host — the loop must stay broadcast-free, with the frontier joins
     // planned as ShuffledHashJoin against the cached by-`u` adjacency
-    val plans = new scala.collection.mutable.ArrayBuffer[String]()
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
-        plans.synchronized { plans += qe.executedPlan.toString }; ()
-      }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    // only executions carrying this test's job tag count: suites running
+    // in parallel share the session but not the tag
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val tag = s"bfs-spec-${java.util.UUID.randomUUID()}"
+    // (the bus delivers an execution's start before its adaptive updates)
+    val tagged = scala.collection.mutable.Set.empty[Long]
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        plans.synchronized {
+          e match {
+            case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+              tagged += s.executionId
+              plans += s.physicalPlanDescription
+            case u: SparkListenerSQLAdaptiveExecutionUpdate if tagged(u.executionId) =>
+              plans += u.physicalPlanDescription
+            case _ =>
+          }
+        }
     }
-    spark.listenerManager.register(l)
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.addJobTag(tag)
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L))
       assert(run(edges, Seq(1L), 2) ==
@@ -89,6 +102,9 @@ class BfsSpec extends SparkTestBase {
         s"BFS loop must not build broadcast relations:\n$all")
       assert(all.contains("ShuffledHashJoin"),
         s"expected ShuffledHashJoin frontier probes:\n$all")
-    } finally spark.listenerManager.unregister(l)
+    } finally {
+      spark.sparkContext.removeJobTag(tag)
+      spark.sparkContext.removeSparkListener(l)
+    }
   }
 }
