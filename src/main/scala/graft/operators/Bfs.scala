@@ -55,8 +55,7 @@ object Bfs {
       seeds: DataFrame,
       seedCol: String,
       maxHops: Int,
-      distinctCanonicalEdges: Boolean = false,
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+      distinctCanonicalEdges: Boolean = false): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     // symmetric adjacency once, hash-partitioned on the probe key `u`
     // and cached in that layout: every round's frontier join then
@@ -73,9 +72,8 @@ object Bfs {
                  .repartition(col("u")).distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var visited = truncate(
-      seeds.select(col(seedCol).as("node")).distinct()
-        .withColumn("hop", lit(0L)))
+    var visited = seeds.select(col(seedCol).as("node")).distinct()
+      .withColumn("hop", lit(0L)).localCheckpoint(true)
     var frontier = visited
     var hop = 0L
     while (hop < maxHops && !frontier.isEmpty) {
@@ -90,8 +88,8 @@ object Bfs {
         .withColumn("hop", lit(hop))
       val prevFrontier = frontier
       val prevVisited = visited
-      frontier = truncate(next)
-      visited = truncate(visited.union(frontier))
+      frontier = next.localCheckpoint(true)
+      visited = visited.union(frontier).localCheckpoint(true)
       // free superseded checkpoint blocks (localCheckpoint persists
       // each round's frame until explicitly released — see Lineage)
       Lineage.releaseSuperseded(prevVisited, visited)

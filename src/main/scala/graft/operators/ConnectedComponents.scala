@@ -21,10 +21,8 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: every operation keys on a node id (uniform
   * after hashing), no windows, no driver-side graph state; the only
   * driver values are the per-round (count, checksum) convergence
-  * probes. Lineage is truncated every round via a caller-injectable
-  * `truncate` hook — `localCheckpoint` by default (right for
-  * local/test), a reliable `checkpoint` against a cluster checkpoint
-  * dir for real deployments.
+  * probes. Lineage is truncated every round with an eager, serialized
+  * `localCheckpoint`.
   */
 object ConnectedComponents {
 
@@ -37,12 +35,12 @@ object ConnectedComponents {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      maxRounds: Int = 50,
-      // serialized checkpoint storage for the same reason as [[KCore]]:
-      // early star rounds hold edge-scale frames, and deserialized
-      // unroll copies are the 8 GB-heap OOM path at 30× scale
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
+    // serialized checkpoint storage for the same reason as [[KCore]]:
+    // early star rounds hold edge-scale frames, and deserialized
+    // unroll copies are the 8 GB-heap OOM path at 30× scale
+    def truncate(df: DataFrame): DataFrame =
+      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // canonical undirected form: a < b, one row per edge. Truncated
     // BEFORE the loop: each star round references the edge set several
     // times, and an expensive upstream (a whole MinHash-LSH pipeline)

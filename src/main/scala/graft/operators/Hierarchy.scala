@@ -17,10 +17,8 @@ import org.apache.spark.sql.functions._
   * hash-partitioned equi-join of the state table with itself on the
   * ancestor id — uniform keys, AQE-splittable, no windows, no
   * driver-side graph state beyond a one-row convergence probe.
-  * Lineage is truncated every round via the caller-injectable
-  * `truncate` hook (`localCheckpoint` locally; a reliable
-  * `checkpoint` on a real cluster) — same discipline as
-  * [[ConnectedComponents]].
+  * Lineage is truncated every round with an eager `localCheckpoint` —
+  * same discipline as [[ConnectedComponents]].
   */
 object Hierarchy {
 
@@ -33,18 +31,18 @@ object Hierarchy {
       edges: DataFrame,
       nodeCol: String,
       parentCol: String,
-      maxRounds: Int = 40,
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+      maxRounds: Int = 40): DataFrame = {
     // state(node, anc, depth, done): anc is an ancestor at exact
     // distance `depth`; done ⇔ anc is a root. Null parent ≡ root.
-    var state = truncate(edges
+    var state = edges
       .select(col(nodeCol).as("node"),
         coalesce(col(parentCol), col(nodeCol)).as("anc"))
       .withColumn("root_self", col("anc") === col("node"))
       .select(col("node"),
         when(col("root_self"), col("node")).otherwise(col("anc")).as("anc"),
         when(col("root_self"), 0L).otherwise(1L).as("depth"),
-        col("root_self").as("done")))
+        col("root_self").as("done"))
+      .localCheckpoint(true)
 
     val n = state.count()
     var round = 0
@@ -56,13 +54,13 @@ object Hierarchy {
       // a dangling pointer silently drops its row here, which the
       // row-count guard below converts into a loud failure
       val prevState = state
-      state = truncate(
-        state.filter(col("done")).union(
-          state.filter(!col("done"))
-            .join(jump, col("anc") === col("j_node"))
-            .select(col("node"), col("j_anc").as("anc"),
-              (col("depth") + col("j_depth")).as("depth"),
-              col("j_done").as("done"))))
+      state = state.filter(col("done")).union(
+        state.filter(!col("done"))
+          .join(jump, col("anc") === col("j_node"))
+          .select(col("node"), col("j_anc").as("anc"),
+            (col("depth") + col("j_depth")).as("depth"),
+            col("j_done").as("done")))
+        .localCheckpoint(true)
       // free the superseded round's checkpoint blocks (see Lineage)
       Lineage.releaseSuperseded(prevState, state)
       remaining = state.filter(!col("done")).limit(1).count()

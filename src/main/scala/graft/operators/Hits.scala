@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * DECIMAL(38,0) sums (the q134 convention).
   *
   * Per half-round: one equi-join of the edge list against the current
-  * score frame (the score side is |V|-bounded and broadcast-eligible)
-  * + one sum aggregation on uniform node keys. Like [[PageRank]],
-  * rounds are a constant and lineage is truncated per round.
+  * score frame (the score side is |V|-bounded and carries a
+  * SHUFFLE_HASH hint) + one sum aggregation on uniform node keys. Like
+  * [[PageRank]], rounds are a constant; the hub frame's lineage is
+  * truncated every other round.
   */
 object Hits {
 
@@ -26,8 +27,7 @@ object Hits {
     * they touch any edge).
     */
   def scores(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int,
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     // the edge set is cached TWICE, hash-partitioned on each half-
     // round's join key (u for the hub→auth pass, v for auth→hub): every
@@ -57,7 +57,13 @@ object Hits {
     var hubs = eV.join(sh(auths.withColumnRenamed("node", "v")), "v")
       .groupBy(col("u").as("node")).agg(sum(col("a")).as("h"))
     for (r <- 2 to rounds) {
-      if (r % 2 == 0) hubs = truncate(hubs)
+      if (r % 2 == 0) {
+        val prevHubs = hubs
+        hubs = hubs.localCheckpoint(true)
+        // free the superseded checkpoint blocks (see Lineage); the
+        // stale `auths` still naming them is replaced below
+        Lineage.releaseSuperseded(prevHubs, hubs)
+      }
       val a = eU.join(sh(hubs.withColumnRenamed("node", "u")), "u")
         .groupBy(col("v").as("node")).agg(sum(col("h")).as("a"))
       auths = a

@@ -36,17 +36,17 @@ object KCore {
       srcCol: String,
       dstCol: String,
       k: Int,
-      maxRounds: Int = 40,
-      // SERIALIZED checkpoint storage: the per-round survivor frame is
-      // edge-scale, and the default deserialized level unrolls one
-      // UnsafeRow COPY per row into the memory store — 32 concurrent
-      // unroll tasks of a 45M-row round transiently blew an 8 GB heap
-      // at 30× scale (round-10's alternating persist scheme kept
-      // compact columnar caches between checkpoints, which is why it
-      // fit). Serialized batches account tightly and spill cleanly.
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)): DataFrame = {
+      maxRounds: Int = 40): DataFrame = {
     require(k >= 1, "k must be >= 1")
+    // SERIALIZED checkpoint storage: the per-round survivor frame is
+    // edge-scale, and the default deserialized level unrolls one
+    // UnsafeRow COPY per row into the memory store — 32 concurrent
+    // unroll tasks of a 45M-row round transiently blew an 8 GB heap
+    // at 30× scale (round-10's alternating persist scheme kept
+    // compact columnar caches between checkpoints, which is why it
+    // fit). Serialized batches account tightly and spill cleanly.
+    def truncate(df: DataFrame): DataFrame =
+      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     var e = truncate(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))

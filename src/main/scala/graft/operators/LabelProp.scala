@@ -45,7 +45,6 @@ object LabelProp {
     */
   def propagate(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int,
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true),
       distinctCanonicalEdges: Boolean = false): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val fwd = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
@@ -87,7 +86,7 @@ object LabelProp {
         .select(col("node"), (-col("m.nl")).as("label"))
       labels = if (r % 2 == 0 && r < rounds) {
         val prevLabels = labels
-        val t = truncate(next)
+        val t = next.localCheckpoint(true)
         // free the superseded checkpoint blocks (see Lineage); a lazy
         // in-between round's plan still references the prior
         // checkpoint and is left alone by the ancestry guard
@@ -99,7 +98,7 @@ object LabelProp {
     // next to the edge work — so the adjacency cache can be released
     // without downstream consumers rebuilding the un-cached self-join
     // once per round reference (the Triangles phantom-cost lesson)
-    val out = truncate(labels)
+    val out = labels.localCheckpoint(true)
     adj.unpersist()
     out
   }

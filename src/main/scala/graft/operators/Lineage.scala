@@ -17,11 +17,9 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Lineage {
 
   /** Release the checkpoint blocks of `prev` once `current` (already
-    * MATERIALIZED) has replaced it. Safe under any `truncate` hook:
-    * only RDDs that back `prev` and are NOT referenced by `current`'s
-    * plan are unpersisted — with an identity (lazy) truncate the old
-    * LogicalRDD is still an ancestor of `current` and is left alone,
-    * and a reliable-checkpoint truncate has no LogicalRDD to release.
+    * MATERIALIZED) has replaced it. Only RDDs that back `prev` and are
+    * NOT referenced by `current`'s plan are unpersisted: a checkpoint
+    * that is still an ancestor of `current` is left alone.
     */
   def releaseSuperseded(prev: DataFrame, current: DataFrame): Unit = {
     val live = current.queryExecution.analyzed.collect {

@@ -32,8 +32,7 @@ object ShortestPath {
     * collapse to their minimum weight).
     */
   def boundedBellmanFord(edges: DataFrame, srcCol: String, dstCol: String,
-      wCol: String, seeds: DataFrame, seedCol: String, rounds: Int,
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+      wCol: String, seeds: DataFrame, seedCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     // canonicalize BEFORE the min-groupBy: grouping (least, greatest)
     // halves the aggregation shuffle vs symmetrize-then-group, and the
@@ -52,9 +51,8 @@ object ShortestPath {
       .repartition(col("u"))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = truncate(
-      seeds.select(col(seedCol).as("node")).distinct()
-        .withColumn("dist", lit(0L)))
+    var dist = seeds.select(col(seedCol).as("node")).distinct()
+      .withColumn("dist", lit(0L)).localCheckpoint(true)
     for (_ <- 1 to rounds) {
       // the distance frame is node-scale and stats-less (checkpointed
       // LogicalRDD); hint SHUFFLE_HASH so the relax join hash-builds
@@ -67,7 +65,7 @@ object ShortestPath {
       val next = dist.union(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
       val prevDist = dist
-      dist = truncate(next)
+      dist = next.localCheckpoint(true)
       // free the superseded round's checkpoint blocks (see Lineage)
       Lineage.releaseSuperseded(prevDist, dist)
     }

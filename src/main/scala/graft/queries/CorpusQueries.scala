@@ -35,7 +35,7 @@ object CorpusQueries {
     val seeds = Tables.orders(s, dir)
       .select(($"o_custkey".cast("long") * 2).as("src"))
       .filter($"src" % 20 === 0)
-    PageRank.personalizedRanks(edges, "src", "dst", seeds, "src", iterations = 3)
+    PageRank.ranks(edges, "src", "dst", iterations = 3, seeds = Some(seeds))
       .select($"node", $"rank".as("ppr"))
       .orderBy($"node")
   }
@@ -289,7 +289,7 @@ object CorpusQueries {
   // trust flows in proportion to how often a customer buys from a
   // supplier (order count as edge weight), not uniformly — q73's
   // recurrence with per-edge (r·w) div W(u) shares, still exact BIGINT
-  // (see PageRank.weightedRanks). 3 iterations, unrolled oracle.
+  // (see PageRank.ranks). 3 iterations, unrolled oracle.
   def q270WeightedPagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = Tables.orders(s, dir).select($"o_orderkey", $"o_custkey")
@@ -298,7 +298,7 @@ object CorpusQueries {
       .groupBy(($"o_custkey".cast("long") * 2).as("src"),
         ($"l_suppkey".cast("long") * 2 + 1).as("dst"))
       .agg(count(lit(1)).as("w"))
-    PageRank.weightedRanks(edges, "src", "dst", "w", iterations = 3)
+    PageRank.ranks(edges, "src", "dst", iterations = 3, weightCol = Some("w"))
       .select($"node", $"rank".as("wpr"))
       .orderBy($"node")
   }
@@ -333,7 +333,7 @@ object CorpusQueries {
   // ---------------------------------------------------------------- q273
 
   // Weighted AND personalized trust propagation: rank flows from the
-  // seed accounts (every 20th customer) in proportion to purchase
+  // seed accounts (every 10th customer) in proportion to purchase
   // volume — q213's seeded teleport with q270's weighted shares, the
   // volume-weighted "how much of OUR trust reaches each supplier"
   // read-out. Same exact-BIGINT recurrence, unrolled oracle.
@@ -348,8 +348,8 @@ object CorpusQueries {
     val seeds = Tables.orders(s, dir)
       .select(($"o_custkey".cast("long") * 2).as("src"))
       .filter($"src" % 20 === 0)
-    PageRank.weightedPersonalizedRanks(edges, "src", "dst", "w",
-        seeds, "src", iterations = 3)
+    PageRank.ranks(edges, "src", "dst", iterations = 3,
+        weightCol = Some("w"), seeds = Some(seeds))
       .select($"node", $"rank".as("wppr"))
       .orderBy($"node")
   }

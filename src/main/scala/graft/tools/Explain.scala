@@ -19,13 +19,18 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    if (args.length > 2) { perQuery(sfDir, out, args.drop(2).toSeq); return }
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.length > 2) perQuery(spark, sfDir, out, args.drop(2).toSeq)
+    else allQueries(spark, sfDir, out)
+    spark.stop()
+  }
+
+  private def allQueries(spark: SparkSession, sfDir: String, out: String): Unit = {
     val sb = new StringBuilder
     sb.append("# Physical plans (explain formatted, sf0.001)\n\n")
     sb.append("Generated by `graft.tools.Explain` — regenerate after plan-affecting changes.\n")
@@ -42,16 +47,10 @@ object Explain {
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[explain] wrote $out")
-    spark.stop()
   }
 
-  private def perQuery(sfDir: String, outDir: String, names: Seq[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private def perQuery(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
@@ -63,6 +62,5 @@ object Explain {
       println(s"[explain] wrote $outDir/$name$suffix.txt")
       spark.catalog.clearCache()
     }
-    spark.stop()
   }
 }

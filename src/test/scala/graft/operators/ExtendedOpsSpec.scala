@@ -130,16 +130,21 @@ class ExtendedOpsSpec extends SparkTestBase {
     val rng = new scala.util.Random(29)
     val edges = (1 to 200).map(_ =>
       (rng.nextInt(15).toLong + 1, rng.nextInt(15).toLong + 101)).distinct
-    val got = Hits.scores(edges.toDF("s", "d"), "s", "d", rounds = 2)
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
-    var h = nodes.map(_ -> 1L).toMap
-    var a = Map.empty[Long, Long]
-    for (_ <- 1 to 2) {
-      a = nodes.map(v => v -> edges.filter(_._2 == v).map(e => h(e._1)).sum).toMap
-      h = nodes.map(u => u -> edges.filter(_._1 == u).map(e => a(e._2)).sum).toMap
+    // 5 rounds truncates the hub frame twice (rounds 2 and 4), so the
+    // second truncation releases the first checkpoint
+    for (rounds <- Seq(2, 5)) {
+      val got = Hits.scores(edges.toDF("s", "d"), "s", "d", rounds = rounds)
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+      var h = nodes.map(_ -> 1L).toMap
+      var a = Map.empty[Long, Long]
+      for (_ <- 1 to rounds) {
+        a = nodes.map(v => v -> edges.filter(_._2 == v).map(e => h(e._1)).sum).toMap
+        h = nodes.map(u => u -> edges.filter(_._1 == u).map(e => a(e._2)).sum).toMap
+      }
+      assert(got == nodes.map(v => v -> ((h(v), a(v)))).toMap && nodes.nonEmpty,
+        s"rounds=$rounds")
     }
-    assert(got == nodes.map(v => v -> ((h(v), a(v)))).toMap && nodes.nonEmpty)
   }
 
   test("reciprocal best match returns exactly the mutual-argmax pairs") {

@@ -9,7 +9,8 @@ import graft.SparkTestBase
   * against a direct in-memory reference implementation of the
   * documented semantics (KTruss's bounded peel with converged-tail
   * padding, Bfs's min-hop frontier, PageRank's exact-integer
-  * truncating recurrence with uniform dangling return).
+  * truncating recurrence with weighted shares and seeded teleport and
+  * dangling return).
   */
 class GraphRandomSpec extends SparkTestBase {
   import spark.implicits._
@@ -94,25 +95,35 @@ class GraphRandomSpec extends SparkTestBase {
 
   // ----------------------------------------------------------- pagerank
 
-  private def prRef(edges: Seq[(Long, Long)], iterations: Int,
+  /** Serial twin of the full PageRank recurrence. Unweighted: distinct
+    * (src, dst) pairs, each of weight 1. Weighted: edges with w <= 0
+    * dropped, parallel edges merged by weight sum. Unseeded: every node
+    * is a seed. Per iteration, each edge carries (r(u) * w) div W(u);
+    * seeds get the base and (dangling mass) div |S|.
+    */
+  private def prRef(edges: Seq[(Long, Long, Long)], iterations: Int,
+      weighted: Boolean = false, seeds: Option[Seq[Long]] = None,
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = 1000000000000L): Map[Long, Long] = {
-    val e = edges.distinct
-    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct.sorted
-    val outdeg = e.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-    val inEdges = e.groupBy(_._2)
-    val n = nodes.size.toLong
-    val r0 = scale / n
+    val e: Map[(Long, Long), Long] =
+      if (weighted) edges.filter(_._3 > 0L).groupMapReduce(t => (t._1, t._2))(_._3)(_ + _)
+      else edges.map(t => (t._1, t._2) -> 1L).toMap
+    val nodes = e.keys.toSeq.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+    val seed: Long => Boolean = seeds.fold((_: Long) => true)(s => s.toSet)
+    val nS = nodes.count(seed).toLong
+    val outW = e.toSeq.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val r0 = scale / nS
     val base = (dampDen - dampNum) * r0 / dampDen
-    var r = nodes.map(_ -> r0).toMap
+    var r = nodes.map(v => v -> (if (seed(v)) r0 else 0L)).toMap
     (1 to iterations).foreach { _ =>
-      val share = r.collect { case (u, ru) if outdeg.contains(u) =>
-        u -> ru / outdeg(u)
-      }
-      val dang = r.collect { case (u, ru) if !outdeg.contains(u) => ru }.sum
+      val contrib = e.toSeq.groupMapReduce(_._1._2) { case ((u, _), w) =>
+        r(u) * w / outW(u)
+      }(_ + _)
+      val dang = nodes.filterNot(outW.contains).map(r).sum
       r = nodes.map { v =>
-        val contrib = inEdges.getOrElse(v, Seq.empty).map(p => share(p._1)).sum
-        v -> (base + dampNum * (contrib + dang / n) / dampDen)
+        val back = if (seed(v)) dang / nS else 0L
+        v -> ((if (seed(v)) base else 0L) +
+          dampNum * (contrib.getOrElse(v, 0L) + back) / dampDen)
       }.toMap
     }
     r
@@ -164,8 +175,36 @@ class GraphRandomSpec extends SparkTestBase {
         val iters = 1 + rnd.nextInt(4)
         val got = PageRank.ranks(edges.toDF("s", "d"), "s", "d", iters)
           .as[(Long, Long)].collect().toMap
-        assert(got == prRef(edges, iters),
+        assert(got == prRef(edges.map(p => (p._1, p._2, 1L)), iters),
           s"trial $trial iters=$iters edges=$edges")
+      }
+    }
+  }
+
+  test("PageRank.ranks == serial twin in all four modes on messy random digraphs") {
+    (1 to 6).foreach { trial =>
+      // nodes 0..7 carry out-edges; 8 and 9 are reached only as
+      // destinations, so they dangle. Duplicates, self-loops and
+      // weights in [-2, 5] ride along; (0, 8) always has weight 3, so
+      // the weighted graph is never empty and seed 0 is in it.
+      val base = (0 until 8).flatMap { a =>
+        (0 until 10).filter(_ => rnd.nextDouble() < 0.25).map(b => (a.toLong, b.toLong))
+      } :+ ((0L, 8L))
+      val noisy = (base ++ base.take(4) ++ Seq((3L, 3L), (5L, 5L)))
+        .zipWithIndex.map { case ((a, b), i) =>
+          (a, b, if (i == base.size - 1) 3L else rnd.nextInt(8).toLong - 2L)
+        }
+      // seeds: one surely-present node, some random ones, and two ids
+      // absent from every graph
+      val seeds = (Seq(0L, 40L, 41L) ++ Seq.fill(2)(rnd.nextInt(10).toLong)).distinct
+      // 5..9 iterations: the rank frame is truncated at iteration 4 (and 8)
+      val iters = 5 + rnd.nextInt(5)
+      for (weighted <- Seq(false, true); seeded <- Seq(None, Some(seeds))) {
+        val got = PageRank.ranks(noisy.toDF("s", "d", "w"), "s", "d", iters,
+            weightCol = Option.when(weighted)("w"), seeds = seeded.map(_.toDF("n")))
+          .as[(Long, Long)].collect().toMap
+        assert(got == prRef(noisy, iters, weighted, seeded),
+          s"trial $trial weighted=$weighted seeds=$seeded iters=$iters edges=$noisy")
       }
     }
   }

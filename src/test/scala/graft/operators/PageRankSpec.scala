@@ -77,4 +77,17 @@ class PageRankSpec extends SparkTestBase {
     // in-cycle node 4 (fed by 3 and 6) retains mass; dangling 7 does not
     assert(out(4L) > out(7L))
   }
+
+  test("an empty graph fails naming the cause, not with / by zero") {
+    def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    val none = Seq.empty[(Long, Long, Long)].toDF("s", "d", "w")
+    assert(message(PageRank.ranks(none, "s", "d", 1)).contains("graph has no nodes"))
+    // every weight <= 0: the weighted edge set is empty after the filter
+    val nonPositive = Seq((1L, 2L, 0L), (2L, 3L, -4L)).toDF("s", "d", "w")
+    assert(message(PageRank.ranks(nonPositive, "s", "d", 1, weightCol = Some("w")))
+      .contains("graph has no nodes"))
+    // with seeds, the seed-side message stands
+    assert(message(PageRank.ranks(none, "s", "d", 1, seeds = Some(Seq(1L).toDF("n"))))
+      .contains("seed set must intersect the graph's node set"))
+  }
 }

@@ -26,7 +26,7 @@ class CorpusQueriesSpec extends SparkTestBase {
     //   r(1)=166+(0+222)/2=277 ; r(2)=166+(249+222)/2=401
     //   r(3)=166+(83+222)/2=318
     val e = Seq((1L, 2L, 3L), (1L, 3L, 1L)).toDF("s", "d", "w")
-    val got = PageRank.weightedRanks(e, "s", "d", "w", iterations = 1,
+    val got = PageRank.ranks(e, "s", "d", iterations = 1, weightCol = Some("w"),
         dampNum = 1L, dampDen = 2L, scale = 1000L)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 277L, 2L -> 401L, 3L -> 318L))
@@ -36,8 +36,8 @@ class CorpusQueriesSpec extends SparkTestBase {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("s", "d")
     val uw = PageRank.ranks(e, "s", "d", iterations = 3)
       .as[(Long, Long)].collect().toMap
-    val w = PageRank.weightedRanks(e.withColumn("w", lit(7L)), "s", "d", "w",
-        iterations = 3).as[(Long, Long)].collect().toMap
+    val w = PageRank.ranks(e.withColumn("w", lit(7L)), "s", "d",
+        iterations = 3, weightCol = Some("w")).as[(Long, Long)].collect().toMap
     // floor(7r / 7deg) = floor(r / deg) exactly, so uniform weights
     // must reproduce the unweighted ranks on any graph
     assert(uw == w)
@@ -45,11 +45,11 @@ class CorpusQueriesSpec extends SparkTestBase {
 
   test("weightedPersonalizedRanks with uniform weights equals personalizedRanks") {
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 1L)).toDF("s", "d")
-    val seeds = Seq(1L, 3L).toDF("n")
-    val p = PageRank.personalizedRanks(e, "s", "d", seeds, "n", iterations = 3)
+    val seeds = Some(Seq(1L, 3L).toDF("n"))
+    val p = PageRank.ranks(e, "s", "d", iterations = 3, seeds = seeds)
       .as[(Long, Long)].collect().toMap
-    val wp = PageRank.weightedPersonalizedRanks(
-        e.withColumn("w", lit(5L)), "s", "d", "w", seeds, "n", iterations = 3)
+    val wp = PageRank.ranks(e.withColumn("w", lit(5L)), "s", "d",
+        iterations = 3, weightCol = Some("w"), seeds = seeds)
       .as[(Long, Long)].collect().toMap
     assert(p == wp && p.nonEmpty)
   }
@@ -57,8 +57,8 @@ class CorpusQueriesSpec extends SparkTestBase {
   test("personalizedRanks: nodes unreachable from the seeds stay at 0") {
     // 1 -> 2 -> 3, isolated pair 4 -> 5; seed = {1}
     val e = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("s", "d")
-    val ranks = PageRank.personalizedRanks(e, "s", "d",
-        Seq(1L).toDF("n"), "n", iterations = 3)
+    val ranks = PageRank.ranks(e, "s", "d", iterations = 3,
+        seeds = Some(Seq(1L).toDF("n")))
       .as[(Long, Long)].collect().toMap
     assert(ranks(4L) == 0L && ranks(5L) == 0L)
     assert(ranks(1L) > 0L && ranks(2L) > 0L && ranks(3L) > 0L)
@@ -72,8 +72,8 @@ class CorpusQueriesSpec extends SparkTestBase {
     // it2: share 1->2 = 500; dang = r(2) = 500 -> returns to the seed
     //   r(1) = 500 + (1*(0+500))/2 = 750 ; r(2) = (1*500)/2 = 250
     val e = Seq((1L, 2L)).toDF("s", "d")
-    val ranks = PageRank.personalizedRanks(e, "s", "d",
-        Seq(1L).toDF("n"), "n", iterations = 2,
+    val ranks = PageRank.ranks(e, "s", "d", iterations = 2,
+        seeds = Some(Seq(1L).toDF("n")),
         dampNum = 1L, dampDen = 2L, scale = 1000L)
       .as[(Long, Long)].collect().toMap
     assert(ranks == Map(1L -> 750L, 2L -> 250L))
@@ -81,9 +81,10 @@ class CorpusQueriesSpec extends SparkTestBase {
 
   test("personalizedRanks rejects a seed set disjoint from the graph") {
     val e = Seq((1L, 2L)).toDF("s", "d")
-    intercept[IllegalArgumentException] {
-      PageRank.personalizedRanks(e, "s", "d", Seq(9L).toDF("n"), "n", 1)
+    val err = intercept[IllegalArgumentException] {
+      PageRank.ranks(e, "s", "d", 1, seeds = Some(Seq(9L).toDF("n")))
     }
+    assert(err.getMessage.contains("seed set must intersect the graph's node set"))
   }
 
   test("q216 interleave emits 3 weight-3 docs per weight-1 doc") {
