@@ -37,6 +37,8 @@ import graft.operators.Skewness
   *
   * Every `start*` reads through [[jsonSource]], writes parquet through
   * [[fileSink]] and clones its session only through [[sessionFor]].
+  * The query packs' own streaming harnesses clone theirs through
+  * [[streamingSession]].
   */
 object Pipelines {
 
@@ -58,6 +60,20 @@ object Pipelines {
     if (conf.availableNow) Trigger.AvailableNow()
     else Trigger.ProcessingTime(conf.timeThreshold.toMillis)
 
+  /** A new session on `spark`'s context for streaming queries (it starts
+    * from the context's conf, not from `spark`'s runtime settings), with
+    * `settings` set on it and checkpoint files written in-process through
+    * [[InProcessLocalFs]] (no `chmod`/`readlink` process per file; the
+    * files are the same). Every checkpointed stream the engine starts
+    * runs on one. The caller's session conf and the SparkContext's
+    * Hadoop conf are never touched.
+    */
+  def streamingSession(spark: SparkSession, settings: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    (InProcessLocalFs.Setting +: settings).foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
   /** Streaming state is sharded by `spark.sql.shuffle.partitions` AT
     * CHECKPOINT CREATION, and every micro-batch commits every shard
     * (delta file + rename) even when empty. Shard count should therefore
@@ -65,21 +81,13 @@ object Pipelines {
     * here), not the batch data volume — 32 shards for ~100 stage keys
     * triples empty-batch latency for nothing, while a 100 TB deployment
     * with hot state would raise it well past the session default. The
-    * knob and any `settings` ride a cloned session so the caller's
-    * session conf is never mutated; with neither, the caller's session
-    * runs the query.
+    * knob and any `settings` ride the [[streamingSession]] clone.
     */
   private def sessionFor(spark: SparkSession, conf: Config,
-      settings: (String, String)*): SparkSession = {
-    val all = conf.streamShufflePartitions.map("spark.sql.shuffle.partitions" -> _.toString) ++
-      settings
-    if (all.isEmpty) spark
-    else {
-      val s = spark.newSession()
-      all.foreach { case (k, v) => s.conf.set(k, v) }
-      s
-    }
-  }
+      settings: (String, String)*): SparkSession =
+    streamingSession(spark,
+      conf.streamShufflePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq ++
+        settings: _*)
 
   /** The pipelines' source: `conf.sourceDir` as a JSON file stream, read
     * on [[sessionFor]]`(spark, conf, settings)`.

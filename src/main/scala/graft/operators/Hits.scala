@@ -72,11 +72,15 @@ object Hits {
     }
     val nodes = eU.select(col("u").as("node"))
       .union(eU.select(col("v"))).distinct()
+    // materialize the node-sized output before releasing the edge
+    // caches it reads (LabelProp's rule): a lazy frame would re-read the
+    // source and redo the dedup for every reference
     val out = nodes
       .join(sh(hubs), Seq("node"), "left")
       .join(sh(auths), Seq("node"), "left")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub"),
         coalesce(col("a"), lit(0L)).as("auth"))
+      .localCheckpoint(true)
     eU.unpersist(); eV.unpersist()
     out
   }

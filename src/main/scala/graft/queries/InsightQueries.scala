@@ -590,8 +590,7 @@ object InsightQueries {
     java.nio.file.Files.createSymbolicLink(
       spool.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = graft.ingest.Pipelines.streamingSession(s, "spark.sql.shuffle.partitions" -> "8")
     val raw = s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", 100000).parquet(spool.toString)
     val dim = Tables.customer(s2, dir)

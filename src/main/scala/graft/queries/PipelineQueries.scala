@@ -678,8 +678,8 @@ object PipelineQueries {
 
   /** Shared harness of the event-stream gates (q54/q68): the events
     * table symlinked into a parquet spool and read as a stream on a
-    * cloned session with 8 state shards (sized to ~user cardinality, see
-    * Pipelines.sessionFor; caller conf untouched). `query`'s output goes
+    * `Pipelines.streamingSession` clone with 8 state shards (sized to
+    * ~user cardinality, see Pipelines.sessionFor). `query`'s output goes
     * to a parquet sink in two AvailableNow runs on ONE checkpoint, each
     * after a sentinel event (user -1) lands one, then two days past the
     * last event: the second run's watermark flushes the first run's
@@ -693,8 +693,7 @@ object PipelineQueries {
     val spool = Files.createDirectories(tmp.resolve("spool"))
     Files.createSymbolicLink(spool.resolve("events.parquet"), Paths.get(s"$dir/events.parquet"))
     val maxMs = Tables.events(s, dir).agg(max(unix_millis(col("ts")))).head().getLong(0)
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = graft.ingest.Pipelines.streamingSession(s, "spark.sql.shuffle.partitions" -> "8")
     for (offMs <- Seq(86400000L, 2L * 86400000L)) {
       val part = tmp.resolve(s"sentinel-$offMs")
       Tables.eventSentinel(s, schema, maxMs + offMs).coalesce(1).write.parquet(part.toString)
@@ -1055,8 +1054,7 @@ object PipelineQueries {
       java.nio.file.Files.createSymbolicLink(
         spool.resolve(s"events-$copy.parquet"),
         java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = graft.ingest.Pipelines.streamingSession(s, "spark.sql.shuffle.partitions" -> "8")
     val raw = s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", 100000).parquet(spool.toString)
     Tables.normalizeEventTs(raw)
@@ -1130,8 +1128,7 @@ object PipelineQueries {
     val spool = tmp.resolve("spool").toString
     val idx = tmp.resolve("lsh_index").toString
     val ckpt = tmp.resolve("ckpt").toString
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = graft.ingest.Pipelines.streamingSession(s, "spark.sql.shuffle.partitions" -> "8")
     for (parity <- 0 to 1) {
       emb.filter(col("vec_id") % 2 === parity)
         .write.mode("append").parquet(spool)

@@ -162,8 +162,7 @@ object TrainingQueries {
         }
       } finally listing.close()
     }
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = graft.ingest.Pipelines.streamingSession(s, "spark.sql.shuffle.partitions" -> "8")
     def run(): Unit = {
       val raw = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", 100000).parquet(spool.toString)

@@ -143,8 +143,7 @@ object WarehouseQueries {
       .select($"user_id", $"event_id", unix_millis($"ts").as("ms"), $"event_type")
     val tmp = PipelineQueries.tempDir("graft-q91")
     val src = tmp.resolve("src").toString
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = graft.ingest.Pipelines.streamingSession(s, "spark.sql.shuffle.partitions" -> "8")
     for (parity <- 0 to 1) {
       ev.filter($"event_id" % 2 === parity).write.mode("append").parquet(src)
       val stream = s2.readStream.schema(ev.schema)
