@@ -67,10 +67,23 @@ object Pipelines {
     * files are the same). Every checkpointed stream the engine starts
     * runs on one. The caller's session conf and the SparkContext's
     * Hadoop conf are never touched.
+    *
+    * Per-session artifact isolation (`spark.sql.artifact.isolation.enabled`)
+    * is off. With it on (Spark's default), every `StreamExecution` runs
+    * on a clone with a new session UUID, each UUID gets its own executor
+    * class loader, and `CodeGenerator`'s cache is keyed by that loader:
+    * every task of every stream run recompiled its generated classes,
+    * and resolved names through a jar-scanning loader. The engine adds
+    * no jars or artifacts to any session, so isolation kept nothing
+    * apart. Off, every run's tasks share the executor's default loader
+    * and its compiled classes (`StreamingSessionSpec`). `ArtifactManager`
+    * reads the setting on the session's first job, so it is set here,
+    * before any use; each run's clone copies it.
     */
   def streamingSession(spark: SparkSession, settings: (String, String)*): SparkSession = {
     val s = spark.newSession()
-    (InProcessLocalFs.Setting +: settings).foreach { case (k, v) => s.conf.set(k, v) }
+    (InProcessLocalFs.Setting +: ("spark.sql.artifact.isolation.enabled" -> "false") +: settings)
+      .foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
 

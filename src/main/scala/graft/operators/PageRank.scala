@@ -69,7 +69,9 @@ object PageRank {
     *
     * Static frames (edges, weight totals, nodes) persist — their plans
     * never grow, an eager checkpoint would only pay an extra
-    * materialization job each.
+    * materialization job each. The output is materialized
+    * (`localCheckpoint`) before they are released, so it is returned
+    * eagerly and holds no cache behind it.
     */
   def ranks(
       edges: DataFrame,
@@ -155,6 +157,11 @@ object PageRank {
         Lineage.releaseSuperseded(prevRanks, ranks)
       }
     }
-    ranks.select(col("node"), col("r").as("rank"))
+    // materialize the node-sized output so the static frames can be
+    // released (Hits and LabelProp's rule); left cached, a later call
+    // on the same edges re-cached them over the stale entries
+    val out = ranks.select(col("node"), col("r").as("rank")).localCheckpoint(true)
+    e.unpersist(); outw.unpersist(); ew.unpersist(); marked.unpersist()
+    out
   }
 }
