@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+import GraphLoop.{advance, checkpoint}
 
 /** Connected components over an undirected edge list — the transitive
   * closure that turns near-duplicate PAIRS (MinHash/SimHash/cosine
@@ -22,7 +24,8 @@ import org.apache.spark.sql.functions._
   * after hashing), no windows, no driver-side graph state; the only
   * driver values are the per-round (count, checksum) convergence
   * probes. Lineage is truncated every round with an eager, serialized
-  * `localCheckpoint`.
+  * checkpoint ([[GraphLoop.advance]]): early star rounds hold
+  * edge-scale frames.
   */
 object ConnectedComponents {
 
@@ -36,50 +39,24 @@ object ConnectedComponents {
       srcCol: String,
       dstCol: String,
       maxRounds: Int = 50): DataFrame = {
-    // serialized checkpoint storage for the same reason as [[KCore]]:
-    // early star rounds hold edge-scale frames, and deserialized
-    // unroll copies are the 8 GB-heap OOM path at 30× scale
-    def truncate(df: DataFrame): DataFrame =
-      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // canonical undirected form: a < b, one row per edge. Truncated
     // BEFORE the loop: each star round references the edge set several
     // times, and an expensive upstream (a whole MinHash-LSH pipeline)
     // must be paid once, not once per reference per round.
-    var e = truncate(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
+    var e = checkpoint(GraphLoop.canonical(edges, srcCol, dstCol), MEMORY_AND_DISK_SER)
 
     // Fixed point: both stars leave the edge set unchanged exactly when
     // the graph is a disjoint union of min-rooted stars. (count, hash
     // checksum) equality is a sound stability probe for a DISTINCT set.
     //
-    // `truncate` fires EVERY round: one star round references `e` six
-    // times, so without per-round lineage truncation the logical plan
-    // grows ~6× per round and Catalyst ANALYSIS goes exponential long
-    // before the data does — caching shrinks execution, not the plan.
-    // The probe is then a tiny second job over the materialized blocks.
+    // The truncation fires EVERY round: one star round references `e`
+    // six times, so the logical plan would grow ~6× per round. The
+    // probe is then a tiny second job over the materialized blocks.
     var prev: (Long, Option[java.math.BigDecimal]) = (-1L, None)
-    // the star rounds join node-scale min frames against the 2|E|
-    // neighbor frame; everything derives from a checkpointed LogicalRDD
-    // with no size stats, so unhinted the planner sort-merges — two
-    // exchanges + two SORTS of edge-scale data per star. The min frames
-    // carry SHUFFLE_HASH hints instead: they are the per-partition hash
-    // build side (already hash-partitioned by their groupBy), the
-    // edge-scale side is exchanged but never sorted, and no per-round
-    // driver-built broadcast relation accumulates in the heap (the
-    // round-11 budget-gated broadcasts anti-scaled with core count on
-    // the contract host — see OPTIMIZATION_r12.md).
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
-      val prevE = e
-      e = truncate(smallStar(largeStar(e)))
-      // free the superseded round's checkpoint blocks (Lineage): the
-      // early star rounds hold edge-scale frames, and localCheckpoint
-      // persists each one until explicitly released
-      Lineage.releaseSuperseded(prevE, e)
+      e = advance(e, smallStar(largeStar(e)), MEMORY_AND_DISK_SER)
       // decimal sum: a Long sum of 64-bit hashes would overflow ANSI math
       val probe = e.agg(count(lit(1)),
         sum(xxhash64(col("a"), col("b")).cast(org.apache.spark.sql.types.DecimalType(38, 0))))
@@ -106,7 +83,7 @@ object ConnectedComponents {
       .toDF("u", "v")
     val mins = nbrs.groupBy("u")
       .agg(least(min(col("v")), col("u")).as("m"))
-    nbrs.join(mins.hint("shuffle_hash"), "u")
+    nbrs.join(GraphLoop.probe(mins), "u")
       .filter(col("v") > col("u") && col("v") =!= col("m"))
       .select(col("m").as("a"), col("v").as("b"))
       .distinct()
@@ -118,7 +95,7 @@ object ConnectedComponents {
   private def smallStar(e: DataFrame): DataFrame = {
     // canonical (a < b) ⇒ smaller-neighbor list of b is exactly the a's
     val mins = e.groupBy(col("b").as("u")).agg(min(col("a")).as("m"))
-    e.join(mins.hint("shuffle_hash"), e("b") === mins("u"))
+    e.join(GraphLoop.probe(mins), e("b") === mins("u"))
       .select(col("m").as("a"), col("a").as("b"))
       .filter(col("a") =!= col("b"))
       .union(mins.select(col("m").as("a"), col("u").as("b")))

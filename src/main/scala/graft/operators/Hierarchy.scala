@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * hash-partitioned equi-join of the state table with itself on the
   * ancestor id — uniform keys, AQE-splittable, no windows, no
   * driver-side graph state beyond a one-row convergence probe.
-  * Lineage is truncated every round with an eager `localCheckpoint` —
-  * same discipline as [[ConnectedComponents]].
+  * Lineage is truncated every round ([[GraphLoop.advance]]).
   */
 object Hierarchy {
 
@@ -34,15 +33,14 @@ object Hierarchy {
       maxRounds: Int = 40): DataFrame = {
     // state(node, anc, depth, done): anc is an ancestor at exact
     // distance `depth`; done ⇔ anc is a root. Null parent ≡ root.
-    var state = edges
+    var state = GraphLoop.checkpoint(edges
       .select(col(nodeCol).as("node"),
         coalesce(col(parentCol), col(nodeCol)).as("anc"))
       .withColumn("root_self", col("anc") === col("node"))
       .select(col("node"),
         when(col("root_self"), col("node")).otherwise(col("anc")).as("anc"),
         when(col("root_self"), 0L).otherwise(1L).as("depth"),
-        col("root_self").as("done"))
-      .localCheckpoint(true)
+        col("root_self").as("done")))
 
     val n = state.count()
     var round = 0
@@ -53,16 +51,12 @@ object Hierarchy {
       // inner join: every unresolved anc must itself appear as a node —
       // a dangling pointer silently drops its row here, which the
       // row-count guard below converts into a loud failure
-      val prevState = state
-      state = state.filter(col("done")).union(
+      state = GraphLoop.advance(state, state.filter(col("done")).union(
         state.filter(!col("done"))
           .join(jump, col("anc") === col("j_node"))
           .select(col("node"), col("j_anc").as("anc"),
             (col("depth") + col("j_depth")).as("depth"),
-            col("j_done").as("done")))
-        .localCheckpoint(true)
-      // free the superseded round's checkpoint blocks (see Lineage)
-      Lineage.releaseSuperseded(prevState, state)
+            col("j_done").as("done"))))
       remaining = state.filter(!col("done")).limit(1).count()
       round += 1
     }

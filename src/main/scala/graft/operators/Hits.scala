@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import GraphLoop.{advance, checkpoint, probe}
 
 /** HITS hubs & authorities (Kleinberg) on a directed graph, kept in
   * exact integers: no per-round normalization — scores after k rounds
@@ -15,8 +16,8 @@ import org.apache.spark.sql.functions._
   * DECIMAL(38,0) sums (the q134 convention).
   *
   * Per half-round: one equi-join of the edge list against the current
-  * score frame (the score side is |V|-bounded and carries a
-  * SHUFFLE_HASH hint) + one sum aggregation on uniform node keys. Like
+  * score frame (the |V|-bounded score side is the [[GraphLoop.probe]]
+  * side) + one sum aggregation on uniform node keys. Like
   * [[PageRank]], rounds are a constant; the hub frame's lineage is
   * truncated every other round.
   */
@@ -33,55 +34,40 @@ object Hits {
     // round's join key (u for the hub→auth pass, v for auth→hub): every
     // half-round join then satisfies its distribution from the cache
     // and only the node-scale score frame moves. The dedup runs
-    // partition-local on the by-`u` layout (HashPartitioning(u)
-    // satisfies the (u, v) clustering); the by-`v` copy re-reads the
-    // first cache, not the source. No per-round broadcasts or count
-    // gates — see [[Bfs]] for why the round-11 broadcast machinery was
-    // removed; the score sides carry SHUFFLE_HASH hints because their
-    // stats-less plans (chained aggs / checkpoints) otherwise plan
-    // SortMergeJoin, re-sorting the cached edge frame each half-round.
-    val eU = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .repartition(col("u")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eV = eU.repartition(col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sh: DataFrame => DataFrame = _.hint("shuffle_hash")
-    // Intermediate frames are NOT zero-filled against the node set: a
-    // node missing from a score frame contributes exactly the 0 the
-    // zero-filled row would — only the final output needs the fill.
-    // Round 1's authority pass is algebraic (h0 = 1 everywhere makes
-    // a1 = in-degree: one aggregation, no join — and exchange-free on
-    // the by-`v` layout). Together with every-other-round truncation
-    // this is the LabelProp constant-factor lesson applied to HITS.
-    var auths = eV.groupBy(col("v").as("node")).agg(count(lit(1)).as("a"))
-    var hubs = eV.join(sh(auths.withColumnRenamed("node", "v")), "v")
-      .groupBy(col("u").as("node")).agg(sum(col("a")).as("h"))
-    for (r <- 2 to rounds) {
-      if (r % 2 == 0) {
-        val prevHubs = hubs
-        hubs = hubs.localCheckpoint(true)
-        // free the superseded checkpoint blocks (see Lineage); the
-        // stale `auths` still naming them is replaced below
-        Lineage.releaseSuperseded(prevHubs, hubs)
-      }
-      val a = eU.join(sh(hubs.withColumnRenamed("node", "u")), "u")
-        .groupBy(col("v").as("node")).agg(sum(col("h")).as("a"))
-      auths = a
-      hubs = eV.join(sh(a.withColumnRenamed("node", "v")), "v")
+    // partition-local on the by-`u` layout; the by-`v` copy re-reads
+    // the first cache, not the source.
+    GraphLoop.scoped { scope =>
+      val eU = scope.persist(edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+        .repartition(col("u")).distinct())
+      val eV = scope.persist(eU.repartition(col("v")))
+      // Intermediate frames are NOT zero-filled against the node set: a
+      // node missing from a score frame contributes exactly the 0 the
+      // zero-filled row would — only the final output needs the fill.
+      // Round 1's authority pass is algebraic (h0 = 1 everywhere makes
+      // a1 = in-degree: one aggregation, no join — and exchange-free on
+      // the by-`v` layout). Together with every-other-round truncation
+      // this is the LabelProp constant-factor lesson applied to HITS.
+      var auths = eV.groupBy(col("v").as("node")).agg(count(lit(1)).as("a"))
+      var hubs = eV.join(probe(auths.withColumnRenamed("node", "v")), "v")
         .groupBy(col("u").as("node")).agg(sum(col("a")).as("h"))
+      for (r <- 2 to rounds) {
+        // the stale `auths` still naming the superseded hubs is
+        // replaced below
+        if (r % 2 == 0) hubs = advance(hubs, hubs)
+        auths = eU.join(probe(hubs.withColumnRenamed("node", "u")), "u")
+          .groupBy(col("v").as("node")).agg(sum(col("h")).as("a"))
+        hubs = eV.join(probe(auths.withColumnRenamed("node", "v")), "v")
+          .groupBy(col("u").as("node")).agg(sum(col("a")).as("h"))
+      }
+      val nodes = eU.select(col("u").as("node"))
+        .union(eU.select(col("v"))).distinct()
+      // the node-sized output, materialized before the scope releases
+      // the edge caches it reads
+      checkpoint(nodes
+        .join(probe(hubs), Seq("node"), "left")
+        .join(probe(auths), Seq("node"), "left")
+        .select(col("node"), coalesce(col("h"), lit(0L)).as("hub"),
+          coalesce(col("a"), lit(0L)).as("auth")))
     }
-    val nodes = eU.select(col("u").as("node"))
-      .union(eU.select(col("v"))).distinct()
-    // materialize the node-sized output before releasing the edge
-    // caches it reads (LabelProp's rule): a lazy frame would re-read the
-    // source and redo the dedup for every reference
-    val out = nodes
-      .join(sh(hubs), Seq("node"), "left")
-      .join(sh(auths), Seq("node"), "left")
-      .select(col("node"), coalesce(col("h"), lit(0L)).as("hub"),
-        coalesce(col("a"), lit(0L)).as("auth"))
-      .localCheckpoint(true)
-    eU.unpersist(); eV.unpersist()
-    out
   }
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+import GraphLoop.{advance, checkpoint}
 
 /** k-core decomposition membership: iteratively peel nodes of degree
   * < k until the remaining subgraph is stable — the standard
@@ -16,16 +18,11 @@ import org.apache.spark.sql.functions._
   * agree — which is what lets a non-recursive SQL oracle unroll a
   * fixed R and still match. Round count is bounded by the peeling
   * depth (typically ≪ 10 on heavy-tailed graphs; `maxRounds` guards
-  * pathological chains). Same per-round lineage-truncation discipline
-  * as [[ConnectedComponents]]: `truncate` fires every round or the
-  * plan grows geometrically.
+  * pathological chains). Each round is an eager, serialized
+  * [[GraphLoop.advance]] — the survivor frame is edge-scale, and an
+  * untruncated plan grows geometrically.
   */
 object KCore {
-
-  // Edge budget under which the per-round surviving-degree frame
-  // (|V|-bounded, ~16 B/node) is broadcast — session-configurable via
-  // GraphConf (spark.graft.graph.broadcastMaxEdges). Above it the
-  // round degrades to two shuffle joins on uniform node keys.
 
   /** (node, core_deg) for every node of the k-core (its degree WITHIN
     * the core, ≥ k by construction). Direction/duplicate edges are
@@ -38,20 +35,7 @@ object KCore {
       k: Int,
       maxRounds: Int = 40): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    // SERIALIZED checkpoint storage: the per-round survivor frame is
-    // edge-scale, and the default deserialized level unrolls one
-    // UnsafeRow COPY per row into the memory store — 32 concurrent
-    // unroll tasks of a 45M-row round transiently blew an 8 GB heap
-    // at 30× scale (round-10's alternating persist scheme kept
-    // compact columnar caches between checkpoints, which is why it
-    // fit). Serialized batches account tightly and spill cleanly.
-    def truncate(df: DataFrame): DataFrame =
-      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var e = truncate(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
+    var e = checkpoint(GraphLoop.canonical(edges, srcCol, dstCol), MEMORY_AND_DISK_SER)
 
     def degrees(cur: DataFrame): DataFrame =
       cur.select(col("a").as("node")).union(cur.select(col("b")))
@@ -62,10 +46,9 @@ object KCore {
     var round = 0
     while (cur != prev && round < maxRounds) {
       // the surviving-degree frame is |V|-bounded and SHRINKS as rounds
-      // peel; under the edge budget broadcast it to both endpoint
+      // peel; under the edge budget it is broadcast to both endpoint
       // filters so the edge frame never shuffles inside the loop.
-      val dAll = degrees(e).filter(col("deg") >= k)
-      val d = if (cur <= GraphConf.broadcastMaxEdges(e)) broadcast(dAll) else dAll
+      val d = GraphLoop.broadcastUnder(degrees(e).filter(col("deg") >= k), cur)
       // both endpoint filters join the IDENTICAL surviving-node subplan
       // (alias-only disambiguation): the renamed projections (node→a /
       // node→b) of the round-10 shape made the two broadcast children
@@ -84,12 +67,7 @@ object KCore {
       // not deduplicate, re-running the degree aggregation twice. One
       // checkpoint job per round (degree agg + one broadcast + the
       // filter joins) plus a block-local count is the round floor.
-      // Each round FREES the blocks it supersedes (Lineage): the peel
-      // holds edge-scale survivors for many rounds, and unreleased
-      // checkpoint block sets OOMed an 8 GB heap at 30× scale.
-      val prevE = e
-      e = truncate(joined)
-      Lineage.releaseSuperseded(prevE, e)
+      e = advance(e, joined, MEMORY_AND_DISK_SER)
       prev = cur
       cur = e.count()
       round += 1

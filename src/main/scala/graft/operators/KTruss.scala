@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * e(a,b) ⋈ adj(a,z) ⋈ adj(b,z) — two shuffle joins on uniform node
   * keys and one hash agg, O(Σ_e deg(a)+deg(b)) probe rows. Rounds are
   * explicitly bounded (`rounds`), each round's survivor frame is
-  * persisted and the previous one released, so lineage never grows —
-  * the [[KCore]]/[[LabelProp]] discipline. At 100 TB the joins hash-
+  * persisted and the previous one released ([[GraphLoop.Scope]]), so
+  * lineage never grows. At 100 TB the joins hash-
   * partition on node id; no step ever materializes per-node degree²
   * rows or collects edges to the driver (round sizes are the only
   * driver scalars, one per round, like PageRank's N).
@@ -32,40 +32,37 @@ object KTruss {
     val spark = edges.sparkSession
     import spark.implicits._
     val minSup = (k - 2).toLong
-    var e = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct().persist()
     val counts = scala.collection.mutable.ListBuffer[(Long, Long)]()
-    counts += ((0L, e.count()))
-    var r = 1
-    var converged = false
-    while (r <= rounds && !converged) {
-      val nb = e.select($"a".as("n"), $"b".as("m"))
-        .unionAll(e.select($"b".as("n"), $"a".as("m")))
-      // z adjacent to a (z ≠ b), then require the (b, z) edge: each
-      // common neighbor closes one triangle on this edge exactly once
-      val sup = e
-        .join(nb.select($"n".as("a"), $"m".as("z")), Seq("a"))
-        .filter($"z" =!= $"b")
-        .join(nb.select($"n".as("b"), $"m".as("z")), Seq("b", "z"))
-        .groupBy($"a", $"b").agg(count(lit(1)).as("sup"))
-      val kept = e.join(sup, Seq("a", "b"), "left")
-        .filter(coalesce($"sup", lit(0L)) >= minSup)
-        .select($"a", $"b").persist()
-      val n = kept.count()
-      counts += ((r.toLong, n))
-      // peeling is monotone: an unchanged edge set is the fixpoint, so
-      // every later round provably returns the same set — emit the
-      // remaining rounds without executing them
-      converged = n == counts(r - 1)._2
-      e.unpersist()
-      e = kept
-      r += 1
+    GraphLoop.scoped { scope =>
+      var e = scope.persist(GraphLoop.canonical(edges, srcCol, dstCol, _.cast("long")))
+      counts += ((0L, e.count()))
+      var r = 1
+      var converged = false
+      while (r <= rounds && !converged) {
+        val nb = e.select($"a".as("n"), $"b".as("m"))
+          .unionAll(e.select($"b".as("n"), $"a".as("m")))
+        // z adjacent to a (z ≠ b), then require the (b, z) edge: each
+        // common neighbor closes one triangle on this edge exactly once
+        val sup = e
+          .join(nb.select($"n".as("a"), $"m".as("z")), Seq("a"))
+          .filter($"z" =!= $"b")
+          .join(nb.select($"n".as("b"), $"m".as("z")), Seq("b", "z"))
+          .groupBy($"a", $"b").agg(count(lit(1)).as("sup"))
+        val kept = scope.persist(e.join(sup, Seq("a", "b"), "left")
+          .filter(coalesce($"sup", lit(0L)) >= minSup)
+          .select($"a", $"b"))
+        val n = kept.count()
+        counts += ((r.toLong, n))
+        // peeling is monotone: an unchanged edge set is the fixpoint, so
+        // every later round provably returns the same set — emit the
+        // remaining rounds without executing them
+        converged = n == counts(r - 1)._2
+        scope.release(e)
+        e = kept
+        r += 1
+      }
     }
-    while (r <= rounds) { counts += ((r.toLong, counts.last._2)); r += 1 }
-    e.unpersist()
+    while (counts.size <= rounds) counts += ((counts.size.toLong, counts.last._2))
     counts.toSeq.toDF("round", "n_edges")
   }
 }

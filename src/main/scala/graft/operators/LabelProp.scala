@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import GraphLoop.{advance, checkpoint, probe}
 
 /** Synchronous majority label propagation (community detection): every
   * node starts labeled with its own id; each round it adopts the most
@@ -38,68 +39,32 @@ object LabelProp {
     *
     * `distinctCanonicalEdges = true` is a caller PROMISE that `edges`
     * is already distinct with src < dst (what `Edges.coOccurrence`
-    * emits) — it skips the symmetrize dedup, saving one full-edge
-    * exchange per call. Passing it for a frame with duplicate edges or
-    * self-loops silently inflates vote counts; leave it false unless
+    * emits) — see [[GraphLoop.Scope.adjacency]]; leave it false unless
     * the producer guarantees the shape.
     */
   def propagate(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int,
       distinctCanonicalEdges: Boolean = false): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val fwd = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    // distinctCanonicalEdges = caller PROMISES the input is already
-    // DISTINCT a < b edges (what
-    // Edges.coOccurrence emits): the mirrored union is then already the
-    // exact symmetric adjacency, and the dedup pass below would be one
-    // redundant full-edge exchange per call.
-    // The adjacency is hash-partitioned on the vote-join key `u` ONCE
-    // and cached in that layout (dedup, when needed, runs partition-
-    // local on it — HashPartitioning(u) satisfies the (u, v)
-    // clustering), so no round re-exchanges the edge set; only the
-    // node-scale label frame moves per round. No per-round broadcasts
-    // or count gates — see [[Bfs]] for why the round-11 broadcast
-    // machinery was removed.
-    val sym = fwd.union(fwd.select(col("v").as("u"), col("u").as("v")))
-    val adj = (if (distinctCanonicalEdges) sym.repartition(col("u"))
-               else sym.filter(col("u") =!= col("v"))
-                 .repartition(col("u")).distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // round 1: identity labels ⇒ all vote counts are 1 ⇒ the
-    // (count, −label) argmax is exactly the smallest neighbor id
-    var labels = adj.groupBy(col("v").as("node")).agg(min(col("u")).as("label"))
-    for (r <- 2 to rounds) {
-      // the label frame is node-scale and stats-less (agg estimate /
-      // checkpointed LogicalRDD): hint SHUFFLE_HASH so the vote join
-      // hash-builds it per partition against the cached by-`u`
-      // adjacency layout instead of sort-merging (which re-sorted the
-      // FULL cached adjacency every round)
-      val lSide = labels.withColumnRenamed("node", "u").hint("shuffle_hash")
-      val votes = adj
-        .join(lSide, "u")
-        .groupBy(col("v").as("node"), col("label"))
-        .agg(count(lit(1)).as("n"))
-      // argmax by (n, −label): max count wins, smallest label on ties
-      val next = votes
-        .groupBy(col("node"))
-        .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("label"))
-      labels = if (r % 2 == 0 && r < rounds) {
-        val prevLabels = labels
-        val t = next.localCheckpoint(true)
-        // free the superseded checkpoint blocks (see Lineage); a lazy
-        // in-between round's plan still references the prior
-        // checkpoint and is left alone by the ancestry guard
-        Lineage.releaseSuperseded(prevLabels, t)
-        t
-      } else next
+    GraphLoop.scoped { scope =>
+      val adj = scope.adjacency(edges, srcCol, dstCol, distinctCanonicalEdges)
+      // round 1: identity labels ⇒ all vote counts are 1 ⇒ the
+      // (count, −label) argmax is exactly the smallest neighbor id
+      var labels = adj.groupBy(col("v").as("node")).agg(min(col("u")).as("label"))
+      for (r <- 2 to rounds) {
+        val next = adj
+          .join(probe(labels.withColumnRenamed("node", "u")), "u")
+          .groupBy(col("v").as("node"), col("label"))
+          .agg(count(lit(1)).as("n"))
+          // argmax by (n, −label): max count wins, smallest label on ties
+          .groupBy(col("node"))
+          .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("m"))
+          .select(col("node"), (-col("m.nl")).as("label"))
+        labels = if (r % 2 == 0 && r < rounds) advance(labels, next) else next
+      }
+      // the node-sized output, materialized before the scope releases
+      // the adjacency it reads
+      checkpoint(labels)
     }
-    // materialize the final (node, label) frame — it is node-sized, tiny
-    // next to the edge work — so the adjacency cache can be released
-    // without downstream consumers rebuilding the un-cached self-join
-    // once per round reference (the Triangles phantom-cost lesson)
-    val out = labels.localCheckpoint(true)
-    adj.unpersist()
-    out
   }
 }

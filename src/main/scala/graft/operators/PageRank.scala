@@ -67,11 +67,9 @@ object PageRank {
     * from a trusted subset). The seed flag rides the node frame, no
     * extra exchanges. Without seeds every node is one.
     *
-    * Static frames (edges, weight totals, nodes) persist — their plans
-    * never grow, an eager checkpoint would only pay an extra
-    * materialization job each. The output is materialized
-    * (`localCheckpoint`) before they are released, so it is returned
-    * eagerly and holds no cache behind it.
+    * Static frames (edges, weight totals, nodes) persist through a
+    * [[GraphLoop.Scope]], released however the call ends; the output
+    * is materialized before they are, so it holds no cache behind it.
     */
   def ranks(
       edges: DataFrame,
@@ -87,81 +85,75 @@ object PageRank {
     require(dampNum >= 0 && dampNum <= dampDen, "damping must be in [0, 1]")
     require(seeds.forall(_.columns.length == 1), "seeds must have exactly one id column")
     val ends = Seq(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e = (weightCol match {
-      case None =>
-        edges.select(ends: _*).repartition(col("src")).distinct().withColumn("w", lit(1L))
-      case Some(w) =>
-        edges.select(ends :+ col(w).cast("long").as("w"): _*)
-          .filter(col("w") > 0L)
-          .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-          .repartition(col("src"))
-    }).persist()
-    if (weightCol.isDefined) {
-      // one bounded 1-row scalar off the persisted edge frame; a wrap in
-      // r * w would otherwise corrupt every downstream rank silently
-      val maxW = e.agg(coalesce(max(col("w")), lit(0L))).head.getLong(0)
-      require(maxW <= Long.MaxValue / scale,
-        s"max merged edge weight $maxW overflows int64 shares at scale=" +
-          s"$scale (limit ${Long.MaxValue / scale}); pass a smaller scale")
-    }
-    val outw = e.groupBy("src").agg(sum(col("w")).as("ws")).persist()
-    val ew = e.join(outw, "src").persist()
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct()
-    val marked = (seeds match {
-      case None => nodes
-      case Some(s) =>
-        nodes.join(s.select(col(s.columns.head).cast("long").as("node"))
-            .distinct().withColumn("__s", lit(1L)), Seq("node"), "left")
-          .select(col("node"), coalesce(col("__s"), lit(0L)).as("seed"))
-    }).persist()
-    // without seeds the flag is the literal `true`, which the optimizer
-    // folds away: no seed column, no CASE in the plain plans
-    val seedSql = if (seeds.isEmpty) "true" else "seed = 1"
-    val seeded = expr(seedSql)
-
-    // |S| and the two literals derived from it are scalars fixed for the
-    // whole run — the one driver-side value this operator ever sees
-    val nS = marked.filter(seeded).count()
-    require(nS >= 1,
-      if (seeds.isEmpty) "graph has no nodes: no edges" +
-        weightCol.fold("")(_ => " with weight > 0")
-      else "seed set must intersect the graph's node set")
-    val r0 = scale / nS
-    val base = (dampDen - dampNum) * r0 / dampDen
-
-    var ranks = marked.withColumn("r", when(seeded, lit(r0)).otherwise(lit(0L)))
-    for (it <- 1 to iterations) {
-      val contrib = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst").as("cnode"), expr("(r * w) div ws").as("sh"))
-        .groupBy(col("cnode")).agg(sum(col("sh")).as("contrib"))
-      // nodes with no out-edge: their whole mass returns to the seeds
-      val dangling = ranks.join(outw, ranks("node") === outw("src"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-      // the output base is the STATIC persisted node frame — the node
-      // set never changes across iterations, and basing the join on
-      // ranks.select("node") re-ran the whole growing rank lineage a
-      // third time per iteration (measured: 40 jobs / 46 s task time
-      // against 27 / 16.5 s)
-      ranks = marked
-        .join(contrib, col("node") === col("cnode"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(marked.columns.map(col) :+
-          (when(seeded, lit(base)).otherwise(lit(0L)) + expr(
-            s"($dampNum * (coalesce(contrib, 0L) + " +
-              s"(CASE WHEN $seedSql THEN dang div $nS ELSE 0 END))) div $dampDen"))
-            .as("r"): _*)
-      if (it % TruncateEvery == 0 && it < iterations) {
-        val prevRanks = ranks
-        ranks = ranks.localCheckpoint(true)
-        // free the superseded checkpoint blocks (see Lineage)
-        Lineage.releaseSuperseded(prevRanks, ranks)
+    GraphLoop.scoped { scope =>
+      val e = scope.persist(weightCol match {
+        case None =>
+          edges.select(ends: _*).repartition(col("src")).distinct().withColumn("w", lit(1L))
+        case Some(w) =>
+          edges.select(ends :+ col(w).cast("long").as("w"): _*)
+            .filter(col("w") > 0L)
+            .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+            .repartition(col("src"))
+      })
+      if (weightCol.isDefined) {
+        // one bounded 1-row scalar off the persisted edge frame; a wrap in
+        // r * w would otherwise corrupt every downstream rank silently
+        val maxW = e.agg(coalesce(max(col("w")), lit(0L))).head.getLong(0)
+        require(maxW <= Long.MaxValue / scale,
+          s"max merged edge weight $maxW overflows int64 shares at scale=" +
+            s"$scale (limit ${Long.MaxValue / scale}); pass a smaller scale")
       }
+      val outw = scope.persist(e.groupBy("src").agg(sum(col("w")).as("ws")))
+      val ew = scope.persist(e.join(outw, "src"))
+      val nodes = e.select(col("src").as("node")).union(e.select(col("dst"))).distinct()
+      val marked = scope.persist(seeds match {
+        case None => nodes
+        case Some(s) =>
+          nodes.join(s.select(col(s.columns.head).cast("long").as("node"))
+              .distinct().withColumn("__s", lit(1L)), Seq("node"), "left")
+            .select(col("node"), coalesce(col("__s"), lit(0L)).as("seed"))
+      })
+      // without seeds the flag is the literal `true`, which the optimizer
+      // folds away: no seed column, no CASE in the plain plans
+      val seedSql = if (seeds.isEmpty) "true" else "seed = 1"
+      val seeded = expr(seedSql)
+
+      // |S| and the two literals derived from it are scalars fixed for the
+      // whole run — the one driver-side value this operator ever sees
+      val nS = marked.filter(seeded).count()
+      require(nS >= 1,
+        if (seeds.isEmpty) "graph has no nodes: no edges" +
+          weightCol.fold("")(_ => " with weight > 0")
+        else "seed set must intersect the graph's node set")
+      val r0 = scale / nS
+      val base = (dampDen - dampNum) * r0 / dampDen
+
+      var ranks = marked.withColumn("r", when(seeded, lit(r0)).otherwise(lit(0L)))
+      for (it <- 1 to iterations) {
+        val contrib = ew.join(ranks, ew("src") === ranks("node"))
+          .select(col("dst").as("cnode"), expr("(r * w) div ws").as("sh"))
+          .groupBy(col("cnode")).agg(sum(col("sh")).as("contrib"))
+        // nodes with no out-edge: their whole mass returns to the seeds
+        val dangling = ranks.join(outw, ranks("node") === outw("src"), "left_anti")
+          .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
+        // the output base is the STATIC persisted node frame — the node
+        // set never changes across iterations, and basing the join on
+        // ranks.select("node") re-ran the whole growing rank lineage a
+        // third time per iteration (measured: 40 jobs / 46 s task time
+        // against 27 / 16.5 s)
+        ranks = marked
+          .join(contrib, col("node") === col("cnode"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(marked.columns.map(col) :+
+            (when(seeded, lit(base)).otherwise(lit(0L)) + expr(
+              s"($dampNum * (coalesce(contrib, 0L) + " +
+                s"(CASE WHEN $seedSql THEN dang div $nS ELSE 0 END))) div $dampDen"))
+              .as("r"): _*)
+        if (it % TruncateEvery == 0 && it < iterations) ranks = GraphLoop.advance(ranks, ranks)
+      }
+      // the node-sized output, materialized before the scope releases
+      // the static frames it reads
+      GraphLoop.checkpoint(ranks.select(col("node"), col("r").as("rank")))
     }
-    // materialize the node-sized output so the static frames can be
-    // released (Hits and LabelProp's rule); left cached, a later call
-    // on the same edges re-cached them over the stale entries
-    val out = ranks.select(col("node"), col("r").as("rank")).localCheckpoint(true)
-    e.unpersist(); outw.unpersist(); ew.unpersist(); marked.unpersist()
-    out
   }
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+import GraphLoop.checkpoint
 
 /** Exact distributed triangle counting with degree-ordered edge
   * orientation + adjacency-array intersection (the compact-forward /
@@ -34,14 +36,13 @@ object Triangles {
     * (n_nodes, n_edges, n_triangles).
     */
   def count(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val (e, deg, closed, cleanup) = closedTriangles(edges, srcCol, dstCol)
-    val nTri = closed.count()
-    val nNodes = deg.count()
-    val nEdges = e.count()
-    cleanup()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    Seq((nNodes, nEdges, nTri)).toDF("n_nodes", "n_edges", "n_triangles")
+    val (nNodes, nEdges, nTri) = GraphLoop.scoped { scope =>
+      val (e, deg, closed) = closedTriangles(scope, edges, srcCol, dstCol)
+      val nTri = closed.count()
+      (deg.count(), e.count(), nTri)
+    }
+    edges.sparkSession.createDataFrame(Seq((nNodes, nEdges, nTri)))
+      .toDF("n_nodes", "n_edges", "n_triangles")
   }
 
   /** Per-node triangle participation and clustering coefficient as the
@@ -53,52 +54,34 @@ object Triangles {
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val (_, deg, closed, cleanup) = closedTriangles(edges, srcCol, dstCol)
-    // credit each triangle to all three corners
-    val corners = closed.select(explode(array(col("u"), col("x"), col("y"))).as("node"))
-      .groupBy(col("node"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_tri"))
-    val out = deg.withColumnRenamed("v", "node").withColumnRenamed("d", "deg")
-      .join(corners, Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-      .withColumn("coef_num", lit(2L) * col("n_tri"))
-      .withColumn("coef_den", col("deg") * (col("deg") - 1L))
-      .localCheckpoint(eager = true) // materialize before unpersisting inputs
-    cleanup()
-    out
+    GraphLoop.scoped { scope =>
+      val (_, deg, closed) = closedTriangles(scope, edges, srcCol, dstCol)
+      // credit each triangle to all three corners
+      val corners = closed.select(explode(array(col("u"), col("x"), col("y"))).as("node"))
+        .groupBy(col("node"))
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_tri"))
+      checkpoint(deg.withColumnRenamed("v", "node").withColumnRenamed("d", "deg")
+        .join(corners, Seq("node"), "left")
+        .select(col("node"), col("deg"),
+          coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+        .withColumn("coef_num", lit(2L) * col("n_tri"))
+        .withColumn("coef_den", col("deg") * (col("deg") - 1L)))
+    }
   }
-
-  // Edge budget below which the adjacency-array frame is broadcast to
-  // both probe sides of the closing intersection: its payload is the
-  // oriented edge set (~16 B/entry), the same memory envelope as a
-  // broadcast edge relation. Session-configurable via GraphConf
-  // (spark.graft.graph.broadcastMaxEdges). Under the budget the
-  // closing path runs with zero exchanges; above it the plan degrades
-  // gracefully to two shuffle joins on uniform node keys — the only
-  // option when the edge set itself is beyond executor memory.
 
   /** Shared core: canonical edge set, degrees, and the closed-triangle
     * triples (u, x, y) — one row per triangle, u the lowest-order
-    * corner, y the highest. Returns (e, deg, closed, cleanup);
-    * `cleanup()` unpersists the internally cached frames after the
-    * caller's actions.
+    * corner, y the highest. The frames it caches live in `scope`.
     */
-  private def closedTriangles(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, DataFrame, DataFrame, () => Unit) = {
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist()
+  private def closedTriangles(scope: GraphLoop.Scope, edges: DataFrame,
+      srcCol: String, dstCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val e = scope.persist(GraphLoop.canonical(edges, srcCol, dstCol))
     // persisted: BOTH broadcast builds below and the caller's
     // deg-joins read it — without the persist each broadcast job
     // re-runs the explode+aggregate from scratch
-    val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
+    val deg = scope.persist(e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("d"))
-      .persist()
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("d")))
     // total order key: (degree, id) packed into one long — ids and
     // degrees are bounded by |V| ≤ 2^31 here; at larger scale keep the
     // pair as a struct key instead
@@ -112,16 +95,14 @@ object Triangles {
     // disambiguation is the shape AQE actually reuses (probed on this
     // Spark: persisted source ⇒ 2 independent BroadcastQueryStages,
     // checkpointed ⇒ ReusedExchange).
-    val ord = deg.select(col("v"), (col("d") * lit(4294967296L) + col("v")).as("k"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val dir = e
+    val ord = checkpoint(deg.select(col("v"), (col("d") * lit(4294967296L) + col("v")).as("k")),
+      MEMORY_AND_DISK_SER)
+    val dir = scope.persist(e
       .join(broadcast(ord).as("o1"), col("a") === col("o1.v"))
       .join(broadcast(ord).as("o2"), col("b") === col("o2.v"))
       .select(
         when(col("o1.k") < col("o2.k"), col("a")).otherwise(col("b")).as("u"),
-        when(col("o1.k") < col("o2.k"), col("b")).otherwise(col("a")).as("v"))
-      .persist()
+        when(col("o1.k") < col("o2.k"), col("b")).otherwise(col("a")).as("v")))
     // out-neighbor arrays (order-capped by orientation); element order
     // is irrelevant to the hashed intersection. localCheckpoint (not
     // persist) for the same reuse reason as `ord`: the arrays are
@@ -129,14 +110,11 @@ object Triangles {
     // broadcast build of the materialized frame — the round-10 shape
     // (persist + renamed projections) built and broadcast this largest
     // frame twice per run, a measured ~40% of q107/q122 task time.
-    // SERIALIZED checkpoint storage (the KCore lesson): the adjacency
-    // arrays are the operator's largest frame, and deserialized unroll
-    // copies of array rows are the 8 GB-heap pressure path — serialized
-    // batches account tightly and spill cleanly
-    val adjChk = dir.groupBy(col("u")).agg(collect_list(col("v")).as("nbrs"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val adj = if (e.count() <= GraphConf.broadcastMaxEdges(e)) broadcast(adjChk) else adjChk
+    // Serialized storage: this is the operator's largest frame.
+    val adj = GraphLoop.broadcastUnder(
+      checkpoint(dir.groupBy(col("u")).agg(collect_list(col("v")).as("nbrs")),
+        MEMORY_AND_DISK_SER),
+      e.count())
     // both probe sides join the IDENTICAL adjacency subplan (alias-only
     // disambiguation, no renamed projections) so the second hash build
     // becomes a ReusedExchange instead of a second build+broadcast (and
@@ -147,9 +125,6 @@ object Triangles {
       .join(adj.as("n2"), col("b") === col("n2.u"))
       .select(col("a").as("u"), col("b").as("x"),
         explode(array_intersect(col("n1.nbrs"), col("n2.nbrs"))).as("y"))
-    val cleanup = () => {
-      e.unpersist(); deg.unpersist(); dir.unpersist(); ()
-    }
-    (e, deg, closed, cleanup)
+    (e, deg, closed)
   }
 }

@@ -173,11 +173,8 @@ object CorpusQueries {
     // graph budget (same envelope as the Triangles adjacency) so the
     // anti-join needs NO exchange or sort of either side — the SMJ
     // form exchanged+sorted both; above the budget it degrades back
-    val edgeSide =
-      if (edges.count() <= graft.operators.GraphConf.broadcastMaxEdges(edges))
-        broadcast(edges) else edges
     val rejected = cands
-      .join(edgeSide,
+      .join(graft.operators.GraphLoop.broadcastUnder(edges, edges.count()),
         least($"u", $"v") === $"a" && greatest($"u", $"v") === $"b",
         "left_anti")
     val w = org.apache.spark.sql.expressions.Window

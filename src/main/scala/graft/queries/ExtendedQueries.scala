@@ -557,10 +557,7 @@ object ExtendedQueries {
       .unionAll(w.select($"b".as("node"), $"w"))
       .groupBy($"node").agg(sum($"w").as("deg"))
       .localCheckpoint(true)
-    val deg =
-      if (degChk.count() <= graft.operators.GraphConf.broadcastMaxEdges(w))
-        broadcast(degChk)
-      else degChk
+    val deg = graft.operators.GraphLoop.broadcastUnder(degChk, degChk.count())
     w.join(deg.as("dA"), $"a" === col("dA.node"))
       .join(deg.as("dB"), $"b" === col("dB.node"))
       .select($"a", $"b", $"w",
@@ -632,10 +629,7 @@ object ExtendedQueries {
     val degChk = e.select($"a".as("node")).unionAll(e.select($"b"))
       .groupBy($"node").agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
-    val deg =
-      if (degChk.count() <= graft.operators.GraphConf.broadcastMaxEdges(e))
-        broadcast(degChk)
-      else degChk
+    val deg = graft.operators.GraphLoop.broadcastUnder(degChk, degChk.count())
     // symmetrize so the correlation is over unordered endpoint pairs
     val pairs = e.unionAll(e.select($"b".as("a"), $"a".as("b")))
       .join(deg.as("dX"), $"a" === col("dX.node"))
@@ -691,9 +685,7 @@ object ExtendedQueries {
       e.select($"a".as("src"), $"b".as("dst")), "src", "dst", rounds = 2,
       distinctCanonicalEdges = true) // coOccurrence emits distinct a<b
     val m = e.count() // one driver scalar
-    val lb =
-      if (m <= graft.operators.GraphConf.broadcastMaxEdges(e)) broadcast(labels)
-      else labels
+    val lb = graft.operators.GraphLoop.broadcastUnder(labels, m)
     val ec = e
       .join(lb.as("l1"), $"a" === col("l1.node"))
       .join(lb.as("l2"), $"b" === col("l2.node"))

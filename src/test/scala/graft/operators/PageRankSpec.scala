@@ -79,7 +79,15 @@ class PageRankSpec extends SparkTestBase {
   }
 
   test("an empty graph fails naming the cause, not with / by zero") {
-    def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    // each failing call also releases every frame it cached before the
+    // failure: nothing it made persistent survives it
+    def message(f: => Any): String = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val msg = intercept[IllegalArgumentException](f).getMessage
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"a failing PageRank.ranks left ${leaked.size} RDDs persisted")
+      msg
+    }
     val none = Seq.empty[(Long, Long, Long)].toDF("s", "d", "w")
     assert(message(PageRank.ranks(none, "s", "d", 1)).contains("graph has no nodes"))
     // every weight <= 0: the weighted edge set is empty after the filter
